@@ -636,13 +636,9 @@ def handle_write(
             dirname = f"{rp}.{m}" if rp else m
             # registered field types constrain later batches (partial
             # write on type conflict — Write_FieldTypeConflict)
-            known: dict[str, str] = {}
-            meta_path = f"{data_root}/{dirname}/{storage.SCHEMA_META}"
-            import json as _json
-            import os as _os
-
-            if _os.path.exists(meta_path):
-                known = _json.load(open(meta_path)).get("field_types", {})
+            known = storage.read_schema(f"{data_root}/{dirname}").get(
+                "field_types", {}
+            )
             wide = to_measurement_table(parsed, m, field_types=known)
             # the write response's row count rides the write job itself as
             # an Observation metric instead of a second count() job that

@@ -29,7 +29,9 @@ def connected_components(
     # Materialize the edge set once and truncate lineage per round —
     # without this every iteration would re-execute the upstream pair
     # pipeline (e.g. the whole MinHash) and the plan would grow per round.
-    # localCheckpoint in local mode; a reliable checkpoint dir on a cluster.
+    # Always localCheckpoint, in every deploy mode: the checkpointed
+    # blocks live in executor storage, so losing an executor loses them
+    # and the job fails rather than recomputing.
     # Both orientations come out of ONE explode over one scan of `pairs`:
     # a self-union would carry two copies of the (expensive) pair-pipeline
     # subtree and execute it twice inside this eager checkpoint.

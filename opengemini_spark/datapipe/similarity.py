@@ -532,13 +532,13 @@ def lsh_near_dups(
         # Output is IDENTICAL on every path
         # (test_lsh_int8_rerank_identical_output pins t=0.85 and 0.45);
         # the upper cut sits at 0.95, conservative toward the
-        # measured-negative tight regime. An EXPLICIT prefilter_dims
-        # wins over this policy default: use_pre below requires
-        # `not int8_rerank`, so resolving int8_rerank=True here would
-        # silently discard a caller's requested CS prefix (r9 advice).
-        int8_rerank = (
-            prefilter_dims is None and 0.8 <= threshold < 0.95
-        )
+        # measured-negative tight regime. A POSITIVE explicit
+        # prefilter_dims wins over this policy default: use_pre below
+        # requires `not int8_rerank`, so resolving int8_rerank=True here
+        # would silently discard a caller's requested CS prefix. An
+        # explicit 0 asks for no CS prefix only, so the int8 policy
+        # still applies.
+        int8_rerank = (not prefilter_dims) and 0.8 <= threshold < 0.95
     if prefilter_dims is None:
         prefilter_dims = dim // 4 if threshold >= 0.8 and dim >= 8 else 0
     use_pre = 0 < prefilter_dims < dim and not int8_rerank

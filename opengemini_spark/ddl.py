@@ -488,39 +488,6 @@ class DDLExecutor:
         self.meta.save()
         return {"ok": True}
 
-    def _delete_where_time(self, s, m):
-        """DELETE FROM <m> WHERE time < '…' — partition-wise rewrite: whole
-        partitions before the cutoff are dropped; the boundary partition is
-        rewritten with the residual filter."""
-        name, op, cutoff_ns = m.group(1), m.group(2), int(m.group(3))
-        assert op in ("<", "<="), "DELETE supports time < / <= cutoffs"
-        found = None
-        for d in self.meta.databases.values():
-            if name in d.measurements:
-                found = self.meta.db_dir(d.name) / name
-        if found is None:
-            raise ValueError(f"DELETE: unknown measurement {name!r}")
-        root = str(found)
-        cutoff_day = str(
-            __import__("datetime").datetime.fromtimestamp(
-                cutoff_ns / 1e9, __import__("datetime").timezone.utc
-            ).date()
-        )
-        storage.retention_drop(root, cutoff_day)
-        # rewrite the boundary partition with the residual predicate
-        part = Path(root) / f"{storage.PARTITION_COL}={cutoff_day}"
-        if part.exists():
-            df = self.spark.read.parquet(str(part))
-            kept = df.filter(~(
-                F.col("time_ns") < cutoff_ns if op == "<"
-                else F.col("time_ns") <= cutoff_ns
-            ))
-            tmp = str(part) + ".rewrite"
-            kept.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(part)
-            Path(tmp).rename(part)
-        return {"ok": True}
-
     # --- row deletion (DELETE FROM / DROP SERIES) -------------------
     data_root: str | None = None   # server-mode write root (api wires it)
 
@@ -622,10 +589,7 @@ class DDLExecutor:
         self, spec: str, conds: list[tuple[str, str, object]], stmt: str
     ) -> None:
         for d in self._measurement_dirs(spec):
-            meta_path = d / storage.SCHEMA_META
-            tags: list[str] = []
-            if meta_path.exists():
-                tags = json.loads(meta_path.read_text()).get("tags") or []
+            tags = storage.read_schema(str(d)).get("tags") or []
             expr = None
             for ident, op, val in conds:
                 if ident.lower() == "time":
@@ -650,26 +614,9 @@ class DDLExecutor:
                 # unconditional: the whole measurement's rows go
                 shutil.rmtree(d, ignore_errors=True)
                 continue
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                str(d)
+            storage.rewrite_measurement(
+                self.spark, str(d), ~F.coalesce(expr, F.lit(False))
             )
-            kept = df.filter(~F.coalesce(expr, F.lit(False)))
-            tmp = str(d) + ".rewrite"
-            (
-                kept.write.mode("overwrite")
-                .partitionBy(storage.PARTITION_COL)
-                .parquet(tmp)
-            )
-            saved_meta = meta_path.read_text() if meta_path.exists() else None
-            shutil.rmtree(d)
-            if not any(Path(tmp).rglob("*.parquet")):
-                # everything deleted: an empty parquet dir is unreadable —
-                # remove the measurement dir outright
-                shutil.rmtree(tmp, ignore_errors=True)
-                continue
-            Path(tmp).rename(d)
-            if saved_meta is not None:
-                (d / storage.SCHEMA_META).write_text(saved_meta)
 
 
     _FIELD_TYPE_WIRE = {

@@ -201,7 +201,8 @@ def test_lsh_int8_rerank_identical_output(spark, sf_dir):
     the quantization error bound only decides which candidate pairs pay
     the exact rerank, never the output — identical frames (pairs AND
     cosines) with the lever forced on and forced off, at a high
-    threshold (its design regime) and at a low one."""
+    threshold (its design regime) and at a low one, and with the policy
+    default under an explicit ``prefilter_dims=0``."""
     from opengemini_spark.catalog import load_table
     from opengemini_spark.datapipe import similarity
 
@@ -224,6 +225,19 @@ def test_lsh_int8_rerank_identical_output(spark, sf_dir):
             ).collect()
         }
         assert on == off and off, thr
+        # an explicit prefilter_dims=0 asks only for no CS prefix: the
+        # int8 default still applies in its regime (its codes ride the
+        # candidate plan), with the same output
+        stats: dict = {}
+        zero = {
+            tuple(r)
+            for r in similarity.lsh_near_dups(
+                corpus, thr, prefilter_dims=0, stats_out=stats
+            ).collect()
+        }
+        plan = stats["candidates"]._jdf.queryExecution().analyzed().toString()
+        assert ("__qz" in plan and "__l1" in plan) == (thr == 0.85), thr
+        assert zero == off, thr
 
 
 def test_blocked_near_dups_block_count_invariance(spark, sf_dir):

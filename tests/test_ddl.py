@@ -3,6 +3,8 @@ partition rewrite."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -49,8 +51,15 @@ def test_delete_from_partition_rewrite(ddl, spark, sf_dir):
     ddl.execute("CREATE DATABASE db1")
     ev = load_table(spark, sf_dir, "events").select("time_ns", "event_type", "value")
     root = str(ddl.meta.db_dir("db1") / "events")
-    storage.write_measurement(ev, root)
+    # two batches, so every day starts with two files
+    odd_us = F.expr("time_ns div 1000 % 2 = 1")
+    storage.write_measurement(ev.filter(~odd_us), root)
+    storage.write_measurement(ev.filter(odd_us), root)
     ddl.register_measurement("db1", "events")
+    days = sorted(Path(root).glob("p_day=*"))
+    assert days and all(len(list(d.glob("*.parquet"))) == 2 for d in days)
+    sidecar = Path(root) / storage.SCHEMA_META
+    schema = sidecar.read_text()
 
     total = ev.count()
     # cutoff mid-day on day 3 of the data
@@ -63,6 +72,11 @@ def test_delete_from_partition_rewrite(ddl, spark, sf_dir):
     back = storage.read_measurement(spark, root)
     assert back.count() == expect
     assert back.agg(F.min("time_ns")).first()[0] >= cutoff
+    # the rewrite goes through the day layout: one file per surviving day,
+    # sidecar carried over
+    days = sorted(Path(root).glob("p_day=*"))
+    assert days and all(len(list(d.glob("*.parquet"))) == 1 for d in days)
+    assert sidecar.read_text() == schema
 
 
 def test_show_shards(ddl, spark, sf_dir):

@@ -29,12 +29,13 @@ def test_partitioned_write_and_prune(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan or pruned.count() > 0
 
 
-def test_write_salts_large_batches_within_day(spark, tmp_path, monkeypatch):
-    """Small batches keep 1 file per day bucket; a batch over the salt
-    threshold spreads each day across several write tasks (the salted
-    repartition key), so one giant day never serializes through one
-    task. Rows identical either way."""
-    df = spark.range(600).select(
+def test_write_layout_rebalances_within_day(spark, tmp_path):
+    """Writes cluster rows by day with AQE's rebalance: a small batch keeps
+    1 file per day bucket, and a day whose map output exceeds
+    ``advisoryPartitionSizeInBytes`` splits across several write tasks —
+    also when every row shares one timestamp, so no time-derived key could
+    spread it. Rows read back identical either way."""
+    two_days = spark.range(600).select(
         (
             F.lit(1_700_000_000_000_000_000)
             + (F.col("id") % 2) * storage.DAY_NS
@@ -42,35 +43,33 @@ def test_write_salts_large_batches_within_day(spark, tmp_path, monkeypatch):
         ).alias("time_ns"),
         F.col("id").alias("v"),
     )
-    small_root = str(tmp_path / "small_tbl")
-    storage.write_measurement(df, small_root)
-    for day in sorted(Path(small_root).glob("p_day=*")):
-        assert len(list(day.glob("*.parquet"))) == 1
+    one_stamp = spark.range(0, 600, 1, 4).select(
+        F.lit(1_700_000_000_000_000_000).alias("time_ns"),
+        F.concat(F.lit("h"), F.col("id").cast("string")).alias("host"),
+        F.col("id").alias("v"),
+    )
 
-    # force the salted path (tiny threshold/target) and disable AQE's
-    # small-partition coalescing so the spread is visible at test size
-    monkeypatch.setenv("OG_WRITE_SALT_OVER_BYTES", "1024")
-    monkeypatch.setenv("OG_WRITE_TARGET_FILE_BYTES", "1024")
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false")
+    def write(df, name):
+        root = str(tmp_path / name)
+        storage.write_measurement(df, root)
+        back = storage.read_measurement(spark, root).select(*df.columns)
+        assert sorted(back.collect()) == sorted(df.collect())
+        return [
+            len(list(d.glob("*.parquet")))
+            for d in sorted(Path(root).glob("p_day=*"))
+        ]
+
+    assert write(two_days, "small_tbl") == [1, 1]
+    advisory_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(advisory_key)
+    spark.conf.set(advisory_key, "1k")
     try:
-        salted_root = str(tmp_path / "salted_tbl")
-        storage.write_measurement(df, salted_root)
+        split = write(two_days, "split_tbl")
+        coarse = write(one_stamp, "coarse_tbl")
     finally:
-        spark.conf.set(coalesce_key, prev)
-    days = sorted(Path(salted_root).glob("p_day=*"))
-    assert len(days) == 2
-    assert all(len(list(d.glob("*.parquet"))) > 1 for d in days)
-    a = sorted(
-        storage.read_measurement(spark, small_root)
-        .select("time_ns", "v").collect()
-    )
-    b = sorted(
-        storage.read_measurement(spark, salted_root)
-        .select("time_ns", "v").collect()
-    )
-    assert a == b
+        spark.conf.set(advisory_key, prev)
+    assert len(split) == 2 and all(n > 1 for n in split)
+    assert len(coarse) == 1 and coarse[0] > 1
 
 
 def test_retention_drop(spark, sf_dir, tmp_path):
