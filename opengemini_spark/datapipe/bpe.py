@@ -1,43 +1,48 @@
-"""Deterministic byte-pair-encoding tokenizer: distributed train + encode.
+"""Deterministic byte-pair-encoding tokenizer: driver-local train,
+DataFrame encode.
 
 Real pipelines budget packing/chunking/mixing in BPE tokens, not
 whitespace words (the repo's ``token_stats`` 4-chars-per-token heuristic
 was the stand-in — r6 verdict "What's missing" #3). This module is the
-subword tokenizer itself, as plain DataFrame plans:
+subword tokenizer itself:
 
-- **train**: Sennrich et al. 2016 ("Neural Machine Translation of Rare
-  Words with Subword Units", arXiv:1508.07909 — the public BPE
-  algorithm): start from characters, repeatedly merge the most frequent
-  adjacent symbol pair. Everything is pinned for cross-engine replay:
-  pair counts are exact int64 word-frequency sums, the merge chosen each
-  step is argmax with ``(count DESC, left ASC, right ASC)`` tie-break,
-  and merge APPLICATION is greedy left-to-right — expressed relationally
-  with the run-parity trick (below), so an independent SQL engine
-  replays every step bit-for-bit.
-- **encode**: the final symbol state of the training frame IS the
-  encoding of every distinct word; corpus text encodes by joining the
-  (small) word→subwords map to exploded tokens and reassembling in
-  position order.
+- **train** (:func:`bpe_train_local_full`): Sennrich et al. 2016
+  ("Neural Machine Translation of Rare Words with Subword Units",
+  arXiv:1508.07909 — the public BPE algorithm): start from characters,
+  repeatedly merge the most frequent adjacent symbol pair. One Spark
+  aggregate collects the distinct-word frame (vocabulary-sized by
+  Heaps' law, loudly bounded by ``max_vocab``); merges then train on
+  the driver with an incremental pair-count index and a
+  lazy-invalidation heap. Everything is pinned for cross-engine replay:
+  pair counts are exact int64 word-frequency sums, the merge chosen
+  each step is argmax with ``(count DESC, left ASC, right ASC)``
+  tie-break, merge application is greedy left-to-right, and training
+  stops early once every word is one symbol. The DuckDB replay
+  (``suite_datapipe._bpe_replay_sql``) is the reference the trainer is
+  pinned to.
+- **encode** (DataFrame plans): each word's final symbol state from
+  training IS its encoding, so :func:`bpe_encode_vocab` encodes a
+  covered corpus with one broadcast join of that word->subwords table;
+  :func:`bpe_apply_merges` encodes held-out text by replaying a frozen
+  merge list over the distinct-word frame. Both reassemble documents by
+  joining the table to exploded tokens in position order.
 
-Greedy-merge-as-relational-algebra: applying merge (a, b) left-to-right
-needs sequential state only when matches OVERLAP, and a match at p and
-p+1 simultaneously requires sym(p+1) = b = a — i.e. overlaps happen only
-for a == b, inside runs of equal symbols. Within each maximal run of
-consecutive match positions (gaps-and-islands over a window), greedy
-merges exactly the odd-ranked matches. So one ``lead`` + two
-``row_number`` windows per step replace the per-word scan loop, and the
-whole step stays word-partitioned (embarrassingly parallel).
+Greedy-merge-as-relational-algebra (:func:`_apply_merge`): applying
+merge (a, b) left-to-right needs sequential state only when matches
+OVERLAP, and a match at p and p+1 simultaneously requires sym(p+1) = b
+= a — i.e. overlaps happen only for a == b, inside runs of equal
+symbols. Within each maximal run of consecutive match positions
+(gaps-and-islands over a window), greedy merges exactly the odd-ranked
+matches. So one ``lead`` + two ``row_number`` windows per step replace
+the per-word scan loop, and the whole step stays word-partitioned
+(embarrassingly parallel); the DuckDB replay applies merges with the
+same windows.
 
-Scale shape (100 TB): training and encoding run over the DISTINCT-word
-frame — vocabulary-sized, orders of magnitude smaller than the corpus
-(Heaps' law), partitioned by word with no skew. The corpus is touched
-twice: once to count words (one hash aggregate) and once to join the
-word→subwords map to exploded tokens (broadcastable for real
-vocabularies; Spark picks the strategy). Per merge step: one 256-key-ish
-pair-count aggregate + windows over the vocab frame; ``localCheckpoint``
-after each step bounds lineage exactly like the k-means Lloyd loop.
-N_merges driver actions of 1 row each (the argmax probe) — bounded by
-the merge budget, not the data.
+Scale shape (100 TB): training and apply run over the DISTINCT-word
+frame — vocabulary-sized, orders of magnitude smaller than the corpus,
+partitioned by word with no skew. The corpus is touched twice: once to
+count words (one hash aggregate) and once to join the word->subwords
+table to exploded tokens (broadcastable for real vocabularies).
 """
 
 from __future__ import annotations
@@ -69,26 +74,6 @@ def _char_state(words: DataFrame) -> DataFrame:
             F.expr("transform(sequence(1, length(word)), i -> substr(word, i, 1))")
         ).alias("__p", "sym"),
     ).select("word", "w", (F.col("__p") + 1).cast("int").alias("pos"), "sym")
-
-
-def _pair_counts(state: DataFrame) -> DataFrame:
-    win = Window.partitionBy("word").orderBy("pos")
-    return (
-        state.withColumn("__nxt", F.lead("sym").over(win))
-        .filter(F.col("__nxt").isNotNull())
-        .groupBy(F.col("sym").alias("a"), F.col("__nxt").alias("b"))
-        .agg(F.sum("w").cast("long").alias("cnt"))
-    )
-
-
-def _best_pair(state: DataFrame) -> DataFrame:
-    """1-row frame (a, b, cnt): the argmax merge with the pinned
-    (count DESC, a ASC, b ASC) tie-break."""
-    return (
-        _pair_counts(state)
-        .orderBy(F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc())
-        .limit(1)
-    )
 
 
 def _apply_merge(state_ab: DataFrame) -> DataFrame:
@@ -140,71 +125,27 @@ def _word_frame(
     )
 
 
-def bpe_states(
-    docs: DataFrame, n_merges: int = BPE_MERGES, text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """Run the trainer: returns ``(final_state, merges)`` where
-    ``final_state`` is the encoded (word, w, pos, sym) frame after all
-    merges and ``merges`` is the learned table (step, a, b, cnt) in
-    merge order. Stops early if the vocabulary is fully merged (every
-    word one symbol) before the budget is spent."""
-    state = _char_state(_word_frame(docs, text_col)).localCheckpoint()
-    merge_frames: list[DataFrame] = []
-    for step in range(1, n_merges + 1):
-        best = _best_pair(state).localCheckpoint()
-        if best.isEmpty():
-            break
-        merge_frames.append(best.select(F.lit(step).alias("step"), "a", "b", "cnt"))
-        state = _apply_merge(
-            state.crossJoin(F.broadcast(best.select("a", "b")))
-        ).localCheckpoint()
-    if not merge_frames:
-        merges = docs.sparkSession.createDataFrame(
-            [], "step int, a string, b string, cnt long"
-        )
-    else:
-        merges = merge_frames[0]
-        for f in merge_frames[1:]:
-            merges = merges.unionByName(f)
-    return state, merges
-
-
-def bpe_train(
-    docs: DataFrame, n_merges: int = BPE_MERGES, text_col: str = "text"
-) -> DataFrame:
-    """The learned merge table: ``(step int, a, b, cnt bigint)``."""
-    _, merges = bpe_states(docs, n_merges, text_col)
-    return merges
-
-
 def bpe_train_local(
     docs: DataFrame,
     n_merges: int = BPE_MERGES,
     text_col: str = "text",
     max_vocab: int = BPE_MAX_LOCAL_VOCAB,
 ) -> list[tuple[str, str, int]]:
-    """Driver-local Sennrich trainer — the PRODUCTION merge-budget path
-    (r7 verdict "what's wrong" #1): :func:`bpe_states` is one sequential
-    Spark job chain PER MERGE (argmax probe + checkpoint), correct and
-    oracle-replayable at the 16-merge suite budget but untenable at a
-    32k-merge production vocabulary (10^4-5 sequential jobs of scheduler
-    overhead for a vocab-sized dataset that fits on the driver). The
-    standard practice this encodes: ONE Spark aggregate collects the
-    distinct-word frame (vocabulary-sized by Heaps' law, loudly bounded
-    by ``max_vocab``), merges train locally with an incremental
-    pair-count index + lazy-invalidation heap (Sennrich et al. 2016's
-    own reference optimization — O(changed pairs · log) per merge, not a
-    vocabulary rescan), and the frozen merge list ships back through the
-    distributed :func:`bpe_apply_merges` / :func:`bpe_encode` path.
+    """Driver-local Sennrich trainer: one vocabulary-sized collect, then
+    merges train on the driver with an incremental pair-count index +
+    lazy-invalidation heap (Sennrich et al. 2016's own reference
+    optimization — O(changed pairs · log) per merge, not a vocabulary
+    rescan), so a 32k-merge production vocabulary costs one Spark job.
 
-    Bit-exact contract with the distributed trainer (pinned by
-    ``test_bpe_local_trainer_equals_distributed``): identical exact
-    int64 pair counts, identical (count DESC, a ASC, b ASC) argmax
-    tie-break (Python str comparison is codepoint order == Spark's
-    UTF8String byte order under UTF-8), identical greedy left-to-right
-    application (the explicit scan IS what the run-parity windows
-    express relationally), identical early stop when the vocabulary is
-    fully merged.
+    Bit-exact contract with the DuckDB replay
+    (``suite_datapipe._bpe_merges_oracle``, pinned by
+    ``test_bpe_local_trainer_equals_oracle``): identical exact int64
+    pair counts, identical (count DESC, a ASC, b ASC) argmax tie-break
+    (Python str comparison is codepoint order == Spark's UTF8String and
+    DuckDB's VARCHAR byte order under UTF-8), identical greedy
+    left-to-right application (the explicit scan IS what the run-parity
+    windows express relationally), identical early stop when the
+    vocabulary is fully merged.
 
     Returns ``[(a, b, cnt), ...]`` in merge order.
     """
@@ -227,7 +168,7 @@ def bpe_train_local_full(
     if len(rows) > max_vocab:
         raise ValueError(
             f"bpe_train_local: distinct-word frame exceeds max_vocab="
-            f"{max_vocab}; raise the bound or use the distributed trainer"
+            f"{max_vocab}; raise max_vocab"
         )
     words: list[list[str]] = [list(r["word"]) for r in rows]
     freqs: list[int] = [r["w"] for r in rows]
@@ -294,6 +235,33 @@ def bpe_train_local_full(
     return merges, vocab_enc
 
 
+def _encode_docs(
+    docs: DataFrame, wenc: DataFrame, text_col: str, id_col: str
+) -> DataFrame:
+    """Join the word->subwords table ``(word, n_sym, enc)`` to the
+    exploded document tokens and reassemble each document in token
+    order: ``(doc_id, n_bpe_tokens, bpe_text)``. Documents with no
+    covered token produce no row."""
+    doc_toks = docs.select(
+        F.col(id_col),
+        F.posexplode(tokens_expr(text_col)).alias("tpos", "word"),
+    )
+    return (
+        doc_toks.join(wenc, "word")
+        .groupBy(id_col)
+        .agg(
+            F.sum("n_sym").cast("long").alias("n_bpe_tokens"),
+            F.array_join(
+                F.expr(
+                    "transform(sort_array(collect_list(struct(tpos, enc))),"
+                    " s -> s.enc)"
+                ),
+                " ",
+            ).alias("bpe_text"),
+        )
+    )
+
+
 def bpe_encode_vocab(
     docs: DataFrame,
     vocab_enc: list[tuple[str, int, str]],
@@ -302,122 +270,19 @@ def bpe_encode_vocab(
 ) -> DataFrame:
     """Encode via a FROZEN word->subwords lookup table (the production
     tokenizer-serving shape: the trained vocabulary is a broadcast map,
-    encoding is one join — no merge chain runs at all). Same output
-    contract as :func:`bpe_encode`; words NOT in ``vocab_enc`` are
-    dropped by the inner join, so this form is for corpora covered by
-    the table (train-on-self, or any corpus whose distinct words were
-    in training) — encode held-out text with unseen words through
-    :func:`bpe_apply_merges` instead."""
-    spark = docs.sparkSession
+    encoding is one join — no merge chain runs at all). Returns
+    ``(doc_id, n_bpe_tokens, bpe_text)`` where ``bpe_text`` is the
+    space-joined subword sequence in document order; words NOT in
+    ``vocab_enc`` are dropped by the inner join, so this form is for
+    corpora covered by the table (train-on-self, or any corpus whose
+    distinct words were in training) — encode held-out text with unseen
+    words through :func:`bpe_apply_merges` instead."""
     wenc = F.broadcast(
-        spark.createDataFrame(
+        docs.sparkSession.createDataFrame(
             vocab_enc, "word string, n_sym long, enc string"
         )
     )
-    doc_toks = docs.select(
-        F.col(id_col),
-        F.posexplode(tokens_expr(text_col)).alias("tpos", "word"),
-    )
-    return (
-        doc_toks.join(wenc, "word")
-        .groupBy(id_col)
-        .agg(
-            F.sum("n_sym").cast("long").alias("n_bpe_tokens"),
-            F.array_join(
-                F.expr(
-                    "transform(sort_array(collect_list(struct(tpos, enc))),"
-                    " s -> s.enc)"
-                ),
-                " ",
-            ).alias("bpe_text"),
-        )
-    )
-
-
-def _encode_from_state(
-    docs: DataFrame,
-    state: DataFrame,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    wenc = state.groupBy("word").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sym"),
-        F.array_join(
-            F.expr(
-                "transform(sort_array(collect_list(struct(pos, sym))),"
-                " s -> s.sym)"
-            ),
-            " ",
-        ).alias("enc"),
-    )
-    doc_toks = docs.select(
-        F.col(id_col),
-        F.posexplode(tokens_expr(text_col)).alias("tpos", "word"),
-    )
-    return (
-        doc_toks.join(wenc, "word")
-        .groupBy(id_col)
-        .agg(
-            F.sum("n_sym").cast("long").alias("n_bpe_tokens"),
-            F.array_join(
-                F.expr(
-                    "transform(sort_array(collect_list(struct(tpos, enc))),"
-                    " s -> s.enc)"
-                ),
-                " ",
-            ).alias("bpe_text"),
-        )
-    )
-
-
-def bpe_encode(
-    docs: DataFrame,
-    n_merges: int = BPE_MERGES,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    merges: list[tuple[str, str]] | None = None,
-) -> DataFrame:
-    """Train-on-self + encode (the corpus-tokenization shape):
-    ``(doc_id, n_bpe_tokens, bpe_text)`` where ``bpe_text`` is the
-    space-joined subword sequence in document order. Documents with no
-    tokens produce no row (same contract as the batch NB scorer).
-
-    ``merges``: a frozen merge list (e.g. from :func:`bpe_train_local`)
-    — encoding then skips the per-merge distributed trainer entirely
-    and runs the one-lazy-plan :func:`bpe_apply_merges` chain. Since
-    the local trainer is pinned bit-equal to the distributed one,
-    ``bpe_encode(docs, merges=local)`` is row-identical to the
-    train-on-self form while collapsing its N-sequential-jobs cost."""
-    if merges is not None:
-        return bpe_apply_merges(docs, merges, text_col, id_col)
-    state, _ = bpe_states(docs, n_merges, text_col)
-    return _encode_from_state(docs, state, text_col, id_col)
-
-
-def bpe_token_counts(
-    docs: DataFrame,
-    n_merges: int = BPE_MERGES,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    merges: list[tuple[str, str]] | None = None,
-) -> DataFrame:
-    """(doc_id, n_subwords) in BPE tokens — drop-in replacement for the
-    4-chars-per-token heuristic in packing/chunking/mixing budgets.
-    Documents with no tokens get 0 (packing must not lose docs).
-    ``merges``: frozen merge list, same contract as :func:`bpe_encode`."""
-    enc = bpe_encode(docs, n_merges, text_col, id_col, merges=merges).select(
-        id_col, F.col("n_bpe_tokens").alias("n_subwords")
-    )
-    return (
-        docs.select(id_col)
-        .join(enc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_subwords"), F.lit(0)).cast("long").alias(
-                "n_subwords"
-            ),
-        )
-    )
+    return _encode_docs(docs, wenc, text_col, id_col)
 
 
 def bpe_apply_merges(
@@ -430,14 +295,15 @@ def bpe_apply_merges(
     """Serving form: encode NEW text with a FROZEN merge list (train /
     apply split — the tokenizer a production pipeline trains once and
     ships). The merges ride in the plan as literals; application is the
-    same word-partitioned window chain, so a held-out corpus (or a
+    word-partitioned run-parity window chain, so a held-out corpus (or a
     stream batch) encodes without re-aggregating the training corpus.
+    Same output contract as :func:`bpe_encode_vocab`.
 
-    Unlike the trainer there is NO per-step driver action: the whole
-    merge chain is one lazy plan (every window partitions by ``word``,
-    so one exchange serves all steps), with a LAZY ``localCheckpoint``
-    every ``checkpoint_every`` steps only to bound plan depth for large
-    merge lists — zero Spark jobs until the caller's action."""
+    There is NO per-step driver action: the whole merge chain is one
+    lazy plan (every window partitions by ``word``, so one exchange
+    serves all steps), with a LAZY ``localCheckpoint`` every
+    ``checkpoint_every`` steps only to bound plan depth for large merge
+    lists — zero Spark jobs until the caller's action."""
     state = _char_state(_word_frame(docs, text_col))
     for i, (a, b) in enumerate(merges):
         state = _apply_merge(
@@ -445,4 +311,14 @@ def bpe_apply_merges(
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < len(merges):
             state = state.localCheckpoint(eager=False)
-    return _encode_from_state(docs, state, text_col, id_col)
+    wenc = state.groupBy("word").agg(
+        F.count(F.lit(1)).cast("long").alias("n_sym"),
+        F.array_join(
+            F.expr(
+                "transform(sort_array(collect_list(struct(pos, sym))),"
+                " s -> s.sym)"
+            ),
+            " ",
+        ).alias("enc"),
+    )
+    return _encode_docs(docs, wenc, text_col, id_col)

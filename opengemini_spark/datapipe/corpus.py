@@ -132,16 +132,17 @@ def pack_sequences(
     buckets are statistically identical under the hash split.
 
     ``counts``: optional precomputed ``(doc_id, n_subwords)`` frame —
-    pass the BPE counter (``bpe.bpe_token_counts``) to budget in real
-    subword tokens instead of the default 4-chars-per-token heuristic.
+    pass BPE counts (``bpe.bpe_encode_vocab``'s ``n_bpe_tokens``) to
+    budget in real subword tokens instead of the default
+    4-chars-per-token heuristic.
     """
     from pyspark.sql import Window
 
     if counts is not None:
         # left-join onto the doc frame so a counts frame that is missing
         # doc_ids cannot silently DROP documents from the packing output
-        # (bpe_token_counts guarantees full coverage, a hand-rolled
-        # counts frame might not — r7 advice); absent docs count 0.
+        # (bpe_encode_vocab emits no row for a token-less doc — r7
+        # advice); absent docs count 0.
         sized = (
             df.select(F.col(id_col).alias("doc_id"))
             .join(

@@ -1145,20 +1145,40 @@ def test_extract_text_order_preserved(spark):
     assert r["n_blocks"] == 3 and r["n_kept"] == 2
 
 
+_BPE_TEXTBOOK = (
+    "low low low low low lower lower newest newest newest widest widest"
+)
+
+
+def _bpe_oracle_rows(sql: str, docs: list[tuple[int, str]] | None = None,
+                     sf_dir: str | None = None, max_doc_id: int = 0):
+    """Run a BPE oracle query in DuckDB over the same ``documents`` rows
+    the engine sees: either literal ``(doc_id, text)`` rows or the
+    fixture's documents with ``doc_id < max_doc_id``."""
+    import duckdb
+
+    con = duckdb.connect()
+    if docs is not None:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+    else:
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM read_parquet("
+            f"'{sf_dir}/documents.parquet') WHERE doc_id < {max_doc_id}"
+        )
+    return con.execute(sql).fetchall()
+
+
 def test_bpe_train_textbook_merges(spark):
     """Sennrich's worked example shape: 'low'-family corpus learns
     (l,o) -> (lo,w) -> (e,s) -> (es,t) in exactly that order."""
     from opengemini_spark.datapipe import bpe
 
     docs = spark.createDataFrame(
-        [(1, "low low low low low lower lower newest newest newest"
-             " widest widest")],
-        "doc_id long, text string",
+        [(1, _BPE_TEXTBOOK)], "doc_id long, text string"
     )
-    merges = [(r["step"], r["a"], r["b"], r["cnt"])
-              for r in bpe.bpe_train(docs, n_merges=4).orderBy("step").collect()]
-    assert merges == [(1, "l", "o", 7), (2, "lo", "w", 7),
-                      (3, "e", "s", 5), (4, "es", "t", 5)]
+    assert bpe.bpe_train_local(docs, n_merges=4) == [
+        ("l", "o", 7), ("lo", "w", 7), ("e", "s", 5), ("es", "t", 5)]
 
 
 def test_bpe_greedy_run_parity(spark):
@@ -1170,81 +1190,94 @@ def test_bpe_greedy_run_parity(spark):
     docs = spark.createDataFrame(
         [(1, "aaaa aaaa aaa")], "doc_id long, text string"
     )
-    out = bpe.bpe_encode(docs, n_merges=1).collect()[0]
+    assert bpe.bpe_train_local(docs, n_merges=1)[0][:2] == ("a", "a")
+    out = bpe.bpe_apply_merges(docs, [("a", "a")]).collect()[0]
     assert out["bpe_text"] == "aa aa aa aa aa a"
     assert out["n_bpe_tokens"] == 6
 
 
-def test_bpe_apply_merges_matches_train_on_self(spark, sf_dir):
-    """Serving form: freezing the trained merge list and re-applying it
-    reproduces the train-on-self encoding bit-for-bit (train/apply
-    split contract)."""
+def test_bpe_local_trainer_equals_oracle(spark, sf_dir):
+    """The driver-local trainer is pinned bit-equal to the DuckDB
+    full-replay oracle of ``text_bpe_merges`` over the same rows:
+    identical merge list INCLUDING counts, on both the textbook corpus
+    and the sf0.001 fixture, and at a budget that outruns the
+    vocabulary (early-stop parity: 12 merges exhaust the textbook
+    words, so both sides stop at 12)."""
+    from opengemini_spark import suite_datapipe as sd
     from opengemini_spark.catalog import load_table
     from opengemini_spark.datapipe import bpe
 
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    trained = bpe.bpe_encode(docs, n_merges=8)
-    merges = [(r["a"], r["b"]) for r in
-              bpe.bpe_train(docs, n_merges=8).orderBy("step").collect()]
-    assert len(merges) == 8
-    served = bpe.bpe_apply_merges(docs, merges)
-    assert sorted(map(tuple, trained.collect())) == \
-        sorted(map(tuple, served.collect()))
-
-
-def test_bpe_local_trainer_equals_distributed(spark, sf_dir):
-    """The driver-local trainer (production merge budgets) is pinned
-    bit-equal to the distributed oracle-replay trainer: identical merge
-    list INCLUDING counts, on both the textbook corpus and the sf0.001
-    fixture, and at a deep budget that outruns the vocabulary (early
-    stop parity)."""
-    from opengemini_spark.catalog import load_table
-    from opengemini_spark.datapipe import bpe
-
-    textbook = spark.createDataFrame(
-        [(1, "low low low low low lower lower newest newest newest"
-             " widest widest")],
-        "doc_id long, text string",
-    )
-    for docs, budget in (
-        (textbook, 4),
-        (textbook, 500),  # budget >> vocabulary: early-stop parity
+    textbook = [(1, _BPE_TEXTBOOK)]
+    textbook_df = spark.createDataFrame(textbook, "doc_id long, text string")
+    for docs, src, budget, n_learned in (
+        (textbook_df, dict(docs=textbook), 4, 4),
+        (textbook_df, dict(docs=textbook), 16, 12),
         (load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60),
-         12),
+         dict(sf_dir=sf_dir, max_doc_id=60), 12, 12),
     ):
-        dist = [(r["a"], r["b"], r["cnt"]) for r in
-                bpe.bpe_train(docs, n_merges=budget).orderBy("step").collect()]
+        oracle = [(a, b, cnt) for _, a, b, cnt in sorted(
+            _bpe_oracle_rows(sd._bpe_merges_oracle(budget), **src))]
         local = bpe.bpe_train_local(docs, n_merges=budget)
-        assert local == dist, (local[:5], dist[:5])
+        assert local == oracle, (budget, local[:5], oracle[:5])
+        assert len(local) == n_learned
 
 
-def test_bpe_encode_frozen_local_merges_row_identical(spark, sf_dir):
-    """bpe_encode(merges=local) — the re-pointed suite path — is
-    row-identical to the train-on-self distributed encode."""
-    from opengemini_spark.catalog import load_table
-    from opengemini_spark.datapipe import bpe
+def _bpe_encode_oracle(sf_dir):
+    """Sorted rows of the DuckDB replay of the ``text_bpe_encode`` oracle
+    shape at 8 merges over ``doc_id < 60``."""
+    from opengemini_spark import suite, suite_datapipe as sd
 
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    local = [(a, b) for a, b, _ in bpe.bpe_train_local(docs, n_merges=8)]
-    served = bpe.bpe_encode(docs, merges=local)
-    trained = bpe.bpe_encode(docs, n_merges=8)
-    assert sorted(map(tuple, served.collect())) == \
-        sorted(map(tuple, trained.collect()))
+    registered = suite.oracle_sql()["text_bpe_encode"]
+    assert registered.startswith(sd._bpe_wenc_sql())
+    sql = sd._bpe_wenc_sql(8) + registered[len(sd._bpe_wenc_sql()):]
+    oracle = sorted(_bpe_oracle_rows(sql, sf_dir=sf_dir, max_doc_id=60))
+    assert oracle
+    return oracle
 
 
 def test_bpe_encode_vocab_row_identical(spark, sf_dir):
-    """The broadcast word->subwords serving table (the one-join
-    production encode the suite entries now run) is row-identical to
-    the distributed train-on-self encode."""
+    """The broadcast word->subwords table the suite entries run is
+    row-identical to the DuckDB replay of the ``text_bpe_encode`` oracle
+    shape at 8 merges over the same rows."""
     from opengemini_spark.catalog import load_table
     from opengemini_spark.datapipe import bpe
 
+    oracle = _bpe_encode_oracle(sf_dir)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
     _, vocab = bpe.bpe_train_local_full(docs, n_merges=8)
-    via_vocab = bpe.bpe_encode_vocab(docs, vocab)
-    trained = bpe.bpe_encode(docs, n_merges=8)
-    assert sorted(map(tuple, via_vocab.collect())) == \
-        sorted(map(tuple, trained.collect()))
+    df = bpe.bpe_encode_vocab(docs, vocab)
+    assert df.columns == ["doc_id", "n_bpe_tokens", "bpe_text"]
+    assert sorted(map(tuple, df.collect())) == oracle
+
+
+def test_bpe_encode_frozen_local_merges_row_identical(spark, sf_dir):
+    """The frozen-merge apply chain over the local trainer's merges is
+    row-identical to the same DuckDB replay."""
+    from opengemini_spark.catalog import load_table
+    from opengemini_spark.datapipe import bpe
+
+    oracle = _bpe_encode_oracle(sf_dir)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
+    merges = bpe.bpe_train_local(docs, n_merges=8)
+    assert len(merges) == 8
+    df = bpe.bpe_apply_merges(docs, [(a, b) for a, b, _ in merges])
+    assert df.columns == ["doc_id", "n_bpe_tokens", "bpe_text"]
+    assert sorted(map(tuple, df.collect())) == oracle
+
+
+def test_bpe_merges_entry_runs_few_jobs(spark, sf_dir):
+    """The registered text_bpe_merges entry trains with one vocabulary
+    collect, not a Spark job chain per merge (>= 3 jobs x 16 merges)."""
+    from opengemini_spark import suite
+
+    fn = suite.queries()["text_bpe_merges"]
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    rows = fn(spark, sf_dir).collect()
+    jobs = len(tracker.getJobIdsForGroup(None) or []) - before
+    assert [r["step"] for r in rows] == list(range(1, len(rows) + 1))
+    assert len(rows) == 16
+    assert jobs < 10, jobs
 
 
 def test_bpe_local_trainer_vocab_bound_raises(spark):
@@ -1305,16 +1338,23 @@ def test_bpe_apply_merges_heldout_unseen_words(spark):
     assert bpe.bpe_encode_vocab(held, vocab).count() == 0
 
 
-def test_bpe_token_counts_keeps_empty_docs(spark):
-    """Packing must not lose docs: a token-free document gets count 0."""
-    from opengemini_spark.datapipe import bpe
+def test_bpe_pack_counts_keep_empty_docs(spark):
+    """Packing must not lose docs: a token-free document has no
+    bpe_encode_vocab row, and pack_sequences' coverage left-join still
+    packs it with count 0 (the q_curate_pack_bpe composition)."""
+    from opengemini_spark.datapipe import bpe, corpus
 
     docs = spark.createDataFrame(
         [(1, "hello world hello"), (2, "!!! ...")],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r["n_subwords"]
-           for r in bpe.bpe_token_counts(docs, n_merges=2).collect()}
+    _, vocab = bpe.bpe_train_local_full(docs, n_merges=2)
+    counts = bpe.bpe_encode_vocab(docs, vocab).select(
+        "doc_id", F.col("n_bpe_tokens").alias("n_subwords")
+    )
+    assert {r["doc_id"] for r in counts.collect()} == {1}
+    out = {r["doc_id"]: r["n_subwords"] for r in corpus.pack_sequences(
+        docs, budget=64, n_buckets=4, counts=counts).collect()}
     assert set(out) == {1, 2} and out[2] == 0 and out[1] > 0
 
 

@@ -8,11 +8,7 @@ Times, at sf0.1 and at the factor-100 documents replication
   by the replica count because make_scale prefixes replica markers) +
   the local merge loop;
 - the broadcast-vocab corpus encode (bpe_encode_vocab), noop-sink timed
-  so every output column materializes;
-- for reference, the r7-era distributed train-on-self encode
-  (bpe_encode) whose per-merge job chain the split replaces — at sf0.1
-  only (the chain's cost is scheduler overhead, not data, so its 100x
-  number adds nothing).
+  so every output column materializes.
 
 Usage: python tools/run_scale_bpe.py
 """
@@ -63,14 +59,6 @@ def main() -> None:
             "train_local_wall_sec": round(train_wall, 2),
             "encode_vocab_wall_sec": round(enc_wall, 2),
         }
-        if label == "sf0.1":
-            t0 = time.time()
-            bpe.bpe_encode(docs).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            out[label]["distributed_train_encode_wall_sec"] = round(
-                time.time() - t0, 2
-            )
         print(json.dumps({label: out[label]}), flush=True)
         spark.catalog.clearCache()
 
