@@ -550,17 +550,19 @@ def holdout_fuzzy_dedup(
 
     Bipartite MinHash-LSH: both corpora share the signature pipeline;
     candidates are (train, holdout) band collisions ONLY (train×train
-    pairs never form — unlike the self-join dedup); the exact
+    pairs never form — unlike the symmetric dedup); the exact
     shingle-set verification touches candidates alone. → the KEPT
     training docs ``(doc_id, source)``.
 
     Scale: signature stage is one explode + hash-agg min per corpus (a
-    single shared scan — the split is a filter); the band join shuffles
-    compact (band, key) rows; the anti-join key is the flagged train-doc
-    id. Work is collision-proportional, never |train|×|holdout|.
+    single shared scan — the split is a filter); the band buckets
+    shuffle compact (band, key) rows; the anti-join key is the flagged
+    train-doc id. Work is collision-proportional, never
+    |train|×|holdout|.
     """
     from opengemini_spark.datapipe.dedup import (
         SHINGLE_K,
+        _shingle_jaccard_verify,
         doc_shingles_raw,
         lsh_band_keys,
         minhash_signatures,
@@ -576,11 +578,10 @@ def holdout_fuzzy_dedup(
     )
     bands = bands.join(side, id_col)
     # bucket the bipartite band collision with ONE groupBy exchange on
-    # (band, key) — the train⋈held self-join this replaces either moved
-    # the band rows twice or (when one leg broadcast) re-executed the
-    # whole signature chain for that leg; collect_list skips the
+    # (band, key), one id list per side: collect_list skips the
     # other-side NULLs, and the double explode emits exactly the
-    # train×held pairs of each bucket (same set the join produced)
+    # train×held pairs of each bucket as (id_a = train, id_b = held).
+    # dedup's symmetric bucket helper would also emit train×train pairs.
     buckets = (
         bands.groupBy("band", "key")
         .agg(
@@ -594,43 +595,13 @@ def holdout_fuzzy_dedup(
         .filter((F.size("__t") >= 1) & (F.size("__h") >= 1))
     )
     cand = (
-        buckets.select(F.explode("__t").alias("id_t"), "__h")
-        .select("id_t", F.explode("__h").alias("id_h"))
+        buckets.select(F.explode("__t").alias("id_a"), "__h")
+        .select("id_a", F.explode("__h").alias("id_b"))
         .distinct()
     )
-    cand_ids = cand.select(F.col("id_t").alias(id_col)).union(
-        cand.select(F.col("id_h").alias(id_col))
-    )
-    arrays = (
-        doc_shingles_raw(
-            tagged.join(F.broadcast(cand_ids), id_col, "left_semi"),
-            SHINGLE_K, text_col, id_col,
-        )
-        .groupBy(id_col)
-        .agg(F.collect_set("sh").alias("__shs"))
-        # both verify legs (t and h) broadcast this frame; two
-        # BroadcastExchange builds cannot share a shuffle stage, so the
-        # candidate re-shingle executed twice without the barrier (same
-        # r10 fix as minhash_lsh_dedup). Candidates-proportional;
-        # within-run only — recomputed from parquet per call.
-        .localCheckpoint(eager=True)
-    )
-    t = arrays.select(
-        F.col(id_col).alias("id_t"), F.col("__shs").alias("__st"),
-        F.size("__shs").alias("__nt"),
-    )
-    h = arrays.select(
-        F.col(id_col).alias("id_h"), F.col("__shs").alias("__sh2"),
-        F.size("__shs").alias("__nh"),
-    )
-    c = F.size(F.array_intersect(F.col("__st"), F.col("__sh2")))
     contaminated = (
-        cand.join(t, "id_t").join(h, "id_h")
-        .withColumn(
-            "jaccard", F.round(c / (F.col("__nt") + F.col("__nh") - c), 4)
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("id_t").alias(id_col))
+        _shingle_jaccard_verify(tagged, cand, threshold, text_col, id_col)
+        .select(F.col("id_a").alias(id_col))
         .distinct()
     )
     return (

@@ -6,10 +6,10 @@ All are shuffle-conscious DataFrame compositions:
 - exact:   one hash-aggregate (map-side partial combine, no row movement
            beyond the md5-key shuffle).
 - minhash: one explode → one aggregate (16 mins in a single pass) → band
-           self-join on (band, key) — the join only touches docs that share
+           buckets on (band, key) — pairs form only among docs that share
            an LSH bucket, never the n² pair space.
 - simhash: one explode → 32 conditional sums in one aggregate → byte-band
-           join (pigeonhole: hamming ≤ 3 on 4 bands ⇒ ≥ 1 equal band).
+           buckets (pigeonhole: hamming ≤ 3 on 4 bands ⇒ ≥ 1 equal band).
 - ngram:   intersection join on rare k-word shingles (sparse by
            construction for k ≥ 4).
 
@@ -21,7 +21,7 @@ proportional to the number of colliding pairs, not documents².
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from opengemini_spark.catalog import parallelize_scan
 from opengemini_spark.datapipe.hashing import (
@@ -132,34 +132,42 @@ def lsh_band_keys(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return sig.select(id_col, F.expr(expr))
 
 
+def _bucket_pairs(rows: DataFrame, keys: list[str], item: Column) -> DataFrame:
+    """Distinct ordered item pairs ``(a, b)`` that share a bucket of ``keys``.
+
+    ONE groupBy exchange collects each bucket's items; buckets of ≥ 2 items
+    double-explode into their pairs, kept once with a < b. An item is the
+    id itself or a struct whose first field is the id — struct order is
+    field order, and an id occurs once per bucket, so a < b orders the ids.
+    A hot bucket is one aggregation task holding its item list, and the
+    double explode streams its m² pairs: task memory is O(bucket), not
+    O(bucket²).
+    """
+    buckets = (
+        rows.groupBy(*keys)
+        .agg(F.collect_list(item).alias("__xs"))
+        .filter(F.size("__xs") >= 2)
+    )
+    return (
+        buckets.select(F.explode("__xs").alias("a"), "__xs")
+        .select("a", F.explode("__xs").alias("b"))
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+    )
+
+
 def candidate_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Distinct id pairs that collide in ≥ 1 LSH band: ``(id_a, id_b)``.
 
-    Buckets form with ONE groupBy exchange on (band, key); pairs come from
-    a double explode of each bucket's id list. The band self-join this
-    replaces moved the (band, key, id) rows twice — and when the planner
-    broadcast one leg, the whole scan→tokenize→shingle→signature chain
-    EXECUTED twice, because a BroadcastExchange cannot reuse the other
-    leg's shuffle stage (the r9 minhash plan shows exactly that). The
-    bucket form computes the signature pipeline once and shuffles each
-    band row once at any scale. Pair set is identical: every unordered
-    (a, b) within a bucket with a < b, distinct across buckets. A
-    degenerate hot bucket concentrates its id list in one aggregation
-    task — the same task the self-join's hot key would land on — and the
-    double explode STREAMS the m² pairs, so task memory is O(bucket),
-    not O(bucket²).
+    Buckets form with one groupBy on (band, key), so each band row
+    shuffles once and the signature pipeline upstream executes once. A
+    band self-join would move the band rows twice, and when the planner
+    broadcasts one leg, the whole scan→shingle→signature chain executes
+    again for it, because a BroadcastExchange cannot reuse the other
+    leg's shuffle stage.
     """
-    buckets = (
-        bands.groupBy("band", "key")
-        .agg(F.collect_list(F.col(id_col)).alias("__ids"))
-        .filter(F.size("__ids") >= 2)
-    )
-    return (
-        buckets.select(F.explode("__ids").alias("id_a"), "__ids")
-        .select("id_a", F.explode("__ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    return _bucket_pairs(bands, ["band", "key"], F.col(id_col)).select(
+        F.col("a").alias("id_a"), F.col("b").alias("id_b")
     )
 
 
@@ -211,27 +219,34 @@ def minhash_lsh_dedup(
     # functions evaluate interpreted, while explode + hash-agg min is
     # whole-stage-codegen'd end to end.)
     raw = doc_shingles_raw(df, SHINGLE_K, text_col, id_col)
-    # candidate_pairs buckets on (band, key) with one groupBy, so the
-    # scan→tokenize→md5→agg chain executes exactly once — no persist
-    # needed on the corpus-sized side
     sig = minhash_signatures(raw, id_col)
-    # persist: the candidate set feeds BOTH the verify join and the
-    # candidate-doc semi-join below. Size is candidates-proportional
-    # (tiny at any corpus scale).
+    # persist: the candidate set feeds both the verify join and the
+    # candidate-doc semi-join. Size is candidates-proportional (tiny at
+    # any corpus scale).
     cand = candidate_pairs(lsh_band_keys(sig, id_col), id_col).persist()
-    # exact verification only touches candidate docs: the left-semi join
-    # dedups its probe side itself, so the (id_a ∪ id_b) union needs no
-    # distinct; at any scale the verify work is proportional to
-    # candidates, not the corpus.
+    return _shingle_jaccard_verify(df, cand, threshold, text_col, id_col)
+
+
+def _shingle_jaccard_verify(
+    df: DataFrame,
+    cand: DataFrame,
+    threshold: float,
+    text_col: str,
+    id_col: str,
+) -> DataFrame:
+    """Exact SHINGLE_K-shingle Jaccard of candidate pairs ``(id_a, id_b)``
+    → ``(id_a, id_b, jaccard ≥ threshold)``, rounded 4dp.
+
+    Only candidate documents are re-shingled: the left-semi join dedups
+    its probe side itself, so the (id_a ∪ id_b) union needs no distinct.
+    Each doc's distinct shingle set becomes ONE array row, and pairs verify
+    with array_intersect — two broadcast-able joins and a single exchange
+    (the collect_set agg) instead of an exploded 3-way join + groupBy + two
+    size joins (6 exchanges, see :func:`jaccard_verify`).
+    """
     cand_docs = cand.select(F.col("id_a").alias(id_col)).union(
         cand.select(F.col("id_b").alias(id_col))
     )
-    # re-shingle just the candidate documents (tiny), collect each doc's
-    # distinct shingle set into ONE array row, and verify pairs with
-    # array_intersect — two broadcast-able joins and a single exchange
-    # (the collect_set agg) instead of the exploded 3-way join + groupBy
-    # + two size joins (6 exchanges; the r3 profile's long tail was this
-    # stage chain's scheduling overhead)
     arrays = (
         doc_shingles_raw(
             df.join(F.broadcast(cand_docs), id_col, "left_semi"),
@@ -241,11 +256,11 @@ def minhash_lsh_dedup(
         .agg(F.collect_set("sh").alias("__shs"))
         # both verify legs (a and b below) broadcast this frame, and two
         # BroadcastExchange builds cannot share a shuffle stage — without
-        # a barrier the candidate re-shingle executed TWICE (r10
-        # executed-plan audit). localCheckpoint beats persist here (1.43
-        # vs 1.69 s median; the two broadcast builds race the lazy cache
-        # and both compute). Candidates-proportional, so tiny at any
-        # scale; within-run only — recomputed from parquet per call.
+        # a barrier the candidate re-shingle executes twice.
+        # localCheckpoint beats persist here (1.43 vs 1.69 s median; the
+        # two broadcast builds race the lazy cache and both compute).
+        # Candidates-proportional, so tiny at any scale; within-run only —
+        # recomputed from parquet per call.
         .localCheckpoint(eager=True)
     )
     a = arrays.select(
@@ -317,61 +332,69 @@ def simhash(
     return agg.select(F.col(id_col), sim.cast("long").alias("simhash"))
 
 
+def hamming_near_dups(
+    hashes: DataFrame,
+    hash_col: str,
+    band_bits: int,
+    max_hamming: int,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Pairs of ids whose integer hashes lie within ``max_hamming`` bits:
+    ``(id_a, id_b, hamming int)`` with id_a < id_b.
+
+    The hash splits into SIMHASH_BANDS bands of ``band_bits`` bits (band b
+    is bits [b·band_bits, (b+1)·band_bits)); docs collide in a
+    (band, value) bucket, and only colliding pairs pay the exact popcount.
+    The hash frame is read once — one groupBy, no self-join.
+
+    Exactness: when the bands cover every hash bit, any pair within
+    hamming 3 agrees on at least one whole band (pigeonhole over 4 bands),
+    so the result is exact for ``max_hamming ≤ 3``. Above that it returns
+    only the band-sharing pairs within ``max_hamming`` — the set the
+    ``dedup_simhash`` oracle computes.
+
+    Hot buckets: one (band, value) bucket is one aggregation task holding
+    its (id, hash) list, and its pairs stream out of the double explode.
+    A degenerate corpus (e.g. constant images) collapses into one bucket.
+    """
+    mask = (1 << band_bits) - 1
+    stack = ", ".join(
+        f"{b}, (`{hash_col}` >> {b * band_bits}) & {mask}"
+        for b in range(SIMHASH_BANDS)
+    )
+    bands = hashes.select(
+        F.struct(F.col(id_col).alias("i"), F.col(hash_col).alias("h")).alias(
+            "__x"
+        ),
+        F.expr(f"stack({SIMHASH_BANDS}, {stack}) as (band, val)"),
+    )
+    return (
+        _bucket_pairs(bands, ["band", "val"], F.col("__x"))
+        .select(
+            F.col("a.i").alias("id_a"), F.col("b.i").alias("id_b"),
+            F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h"))).alias(
+                "hamming"
+            ),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def simhash_near_dups(
     df: DataFrame,
     max_hamming: int = SIMHASH_MAX_HAMMING,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """SimHash near-dup pairs: hamming(simhash) ≤ max_hamming.
+    """SimHash near-dup pairs ``(id_a, id_b, hamming bigint)`` with
+    hamming(simhash) ≤ max_hamming.
 
-    Candidate generation by the pigeonhole principle: with 4 byte-bands,
-    any pair within hamming 3 must agree on ≥ 1 whole band, so the join is
-    on (band, byte) buckets, never all pairs.
+    :func:`hamming_near_dups` over four 8-bit bands of the 32-bit
+    fingerprint: exact up to hamming 3, band-sharing pairs above.
     """
-    sim = simhash(df, text_col, id_col)
-    band_rows = []
-    for b in range(SIMHASH_BANDS):
-        band_rows.append(
-            f"{b}, (simhash >> {b * 8}) & 255"
-        )
-    bands = sim.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.expr(f"stack({SIMHASH_BANDS}, {', '.join(band_rows)}) as (band, byte)"),
-    )
-    # bucket the band collision with ONE groupBy exchange — the self-join
-    # this replaces moved the band rows twice (or re-executed the whole
-    # simhash chain under a broadcast leg); same r10 rewrite as
-    # candidate_pairs. Each id appears once per (band, byte), so the
-    # double explode emits exactly the join's pair set.
-    buckets = (
-        bands.groupBy("band", "byte")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("i"), F.col("simhash").alias("s")
-                )
-            ).alias("__xs")
-        )
-        .filter(F.size("__xs") >= 2)
-    )
-    return (
-        buckets.select(F.explode("__xs").alias("a"), "__xs")
-        .select("a", F.explode("__xs").alias("b"))
-        .filter(F.col("a.i") < F.col("b.i"))
-        .select(
-            F.col("a.i").alias("id_a"), F.col("b.i").alias("id_b"),
-            F.col("a.s").alias("sim_a"), F.col("b.s").alias("sim_b"),
-        )
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.expr("bit_count(sim_a ^ sim_b)").cast("long"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return hamming_near_dups(
+        simhash(df, text_col, id_col), "simhash", 8, max_hamming, id_col
+    ).withColumn("hamming", F.col("hamming").cast("long"))
 
 
 def span_dedup(

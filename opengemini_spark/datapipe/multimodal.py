@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from opengemini_spark.datapipe import codecs
+from opengemini_spark.datapipe.dedup import hamming_near_dups
 
 FEATURE_SCHEMA = StructType(
     [
@@ -497,7 +498,7 @@ def image_dhash(
 
     Scale: one Arrow ``mapInPandas`` over the image bytes (decode +
     two-gather resize + one vectorized compare per image); output is 16
-    bytes/image. Everything downstream (band join, hamming verify)
+    bytes/image. Everything downstream (band buckets, hamming verify)
     operates on the hash only — the pixels never shuffle.
     """
     from opengemini_spark.datapipe import codecs
@@ -529,55 +530,19 @@ def image_dhash_near_dups(
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Image near-duplicate pairs by dHash: ``(id_a, id_b, hamming)``
+    """Image near-duplicate pairs by dHash: ``(id_a, id_b, hamming int)``
     for every pair with hamming distance ≤ ``max_hamming``.
 
-    Candidate generation is the simhash pigeonhole trick on the 64-bit
-    hash: split into four 16-bit bands — any pair within hamming ≤ 3
-    must agree on at least one whole band, so the self-join runs per
-    (band_index, band_value) bucket and the exact hamming check only
-    prices candidate pairs. No pixel data and no O(n²) pair space ever
-    shuffles; at 100 TB the band buckets are the parallelism unit
-    (uniform unless the corpus is degenerate — a constant-image corpus
-    collapses to one bucket, the documented skew caveat shared with
-    simhash).
+    :func:`~opengemini_spark.datapipe.dedup.hamming_near_dups` over four
+    16-bit bands of the 64-bit hash: exact up to hamming 3. The decode
+    runs once; only the 16-byte hash rows shuffle, bucketed by
+    (band, value), so no pixel data and no O(n²) pair space ever moves.
+    A constant-image corpus collapses into one bucket (the hot-bucket
+    caveat shared with simhash).
     """
-    # Materialize the (16 bytes/image) hash frame before the band
-    # self-join: AQE broadcasts one leg, and a BroadcastExchange cannot
-    # reuse the other leg's shuffle stage — without this the whole
-    # decode+hash mapInPandas executes twice (verified in the executed
-    # plan: two MapInPandas nodes). Within-run only; pixels never move.
-    hashes = image_dhash(df, id_col=id_col, payload_col=payload_col).localCheckpoint(
-        eager=True
-    )
-    bands = hashes.select(
-        "doc_id", "dhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftright("dhash", 16 * i)
-                    .bitwiseAND(F.lit(0xFFFF)).alias("val"),
-                )
-                for i in range(4)
-            ])
-        ).alias("b"),
-    ).select("doc_id", "dhash", "b.band", "b.val")
-    a = bands.select(F.col("doc_id").alias("id_a"),
-                     F.col("dhash").alias("ha"), "band", "val")
-    b = bands.select(F.col("doc_id").alias("id_b"),
-                     F.col("dhash").alias("hb"), "band", "val")
-    return (
-        a.join(b, ["band", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return hamming_near_dups(
+        image_dhash(df, id_col=id_col, payload_col=payload_col),
+        "dhash", 16, max_hamming,
     )
 
 
@@ -642,46 +607,15 @@ def audio_fingerprint_near_dups(
     payload_col: str = "payload",
 ) -> DataFrame:
     """Audio near-duplicate pairs by contour fingerprint:
-    ``(id_a, id_b, hamming)`` with hamming ≤ ``max_hamming``.
+    ``(id_a, id_b, hamming int)`` with hamming ≤ ``max_hamming``.
 
-    Same pigeonhole shape as :func:`image_dhash_near_dups`: the 47-bit
-    contour splits into four 12-bit bands — hamming ≤ 3 forces at least
-    one equal band — so candidates come from per-(band, value) buckets
-    and only candidate pairs pay the exact popcount."""
-    # Same reason as image_dhash_near_dups: materialize the tiny hash
-    # frame so the broadcast leg of the band self-join does not replay
-    # the PCM decode mapInPandas a second time.
-    fps = audio_fingerprint(df, id_col=id_col, payload_col=payload_col).localCheckpoint(
-        eager=True
-    )
-    bands = fps.select(
-        "doc_id", "afp",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftright("afp", 12 * i)
-                    .bitwiseAND(F.lit(0xFFF)).alias("val"),
-                )
-                for i in range(4)
-            ])
-        ).alias("b"),
-    ).select("doc_id", "afp", "b.band", "b.val")
-    a = bands.select(F.col("doc_id").alias("id_a"),
-                     F.col("afp").alias("ha"), "band", "val")
-    b = bands.select(F.col("doc_id").alias("id_b"),
-                     F.col("afp").alias("hb"), "band", "val")
-    return (
-        a.join(b, ["band", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    :func:`~opengemini_spark.datapipe.dedup.hamming_near_dups` over four
+    12-bit bands, which cover the 47-bit contour: exact up to hamming 3.
+    The PCM decode runs once; only the 16-byte fingerprint rows shuffle.
+    """
+    return hamming_near_dups(
+        audio_fingerprint(df, id_col=id_col, payload_col=payload_col),
+        "afp", 12, max_hamming,
     )
 
 

@@ -948,7 +948,7 @@ def _image_dhash_oracle() -> str:
     integer nearest-neighbor grid (src = (out·extent)//out_extent),
     gradient bits pack into a two's-complement int64, and the pair leg
     is the exact O(n²) hamming check (the Spark side must produce the
-    identical pair set through its banded join)."""
+    identical pair set through its band buckets)."""
     w = f"({multimodal.PNG_BASE_W} + doc_id % {multimodal.PNG_SPAN_W})"
     h = f"({multimodal.PNG_BASE_H} + doc_id % {multimodal.PNG_SPAN_H})"
     px = (f"((doc_id * 7 + (((j // 8) * {h}) // 8) * 31"

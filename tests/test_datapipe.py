@@ -55,6 +55,28 @@ def test_simhash_identical_docs_hamming_zero(docs):
     assert out[(1, 2)] == 0
 
 
+def test_simhash_near_dups_matches_brute_force(spark, sf_dir):
+    """At the pigeonhole bound (hamming 3 over 4 bands) the band buckets
+    find every pair: equal to all-pairs hamming over the fingerprints."""
+    from opengemini_spark.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    sims = {r["doc_id"]: r["simhash"]
+            for r in dedup.simhash(docs).collect()}
+    ids = sorted(sims)
+    want = set()
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            h = bin(sims[a] ^ sims[b]).count("1")
+            if h <= 3:
+                want.add((a, b, h))
+    out = dedup.simhash_near_dups(docs, max_hamming=3)
+    assert out.schema.simpleString() == \
+        "struct<id_a:bigint,id_b:bigint,hamming:bigint>"
+    got = {tuple(r) for r in out.collect()}
+    assert got == want and want  # non-vacuous
+
+
 def test_cosine_topk_toy(spark):
     rows = [
         (0, [1.0, 0.0]),
@@ -676,14 +698,19 @@ def test_image_dhash_banded_matches_brute_force(spark):
     hashes = {r["doc_id"]: r["dhash"]
               for r in multimodal.image_dhash(imgs).collect()}
     assert len(hashes) == 40
-    want = {
-        (a, b, bin(hashes[a] ^ hashes[b]).count("1"))
-        for a in hashes for b in hashes
-        if a < b and bin(hashes[a] ^ hashes[b]).count("1") <= 2
-    }
-    got = {tuple(r) for r in
-           multimodal.image_dhash_near_dups(imgs, max_hamming=2).collect()}
-    assert got == want and want  # non-vacuous
+
+    def ham(a, b):  # popcount of the 64-bit two's-complement xor
+        return bin((hashes[a] ^ hashes[b]) & (1 << 64) - 1).count("1")
+
+    for max_h in (2, 3):  # 3 = the 4-band pigeonhole bound
+        want = {
+            (a, b, ham(a, b))
+            for a in hashes for b in hashes
+            if a < b and ham(a, b) <= max_h
+        }
+        got = {tuple(r) for r in multimodal.image_dhash_near_dups(
+            imgs, max_hamming=max_h).collect()}
+        assert got == want and want  # non-vacuous
     # same id twice -> identical PNG bytes -> identical hash
     dup = multimodal.synth_png(
         spark.createDataFrame([(9,), (9,)], "doc_id long")
@@ -703,15 +730,15 @@ def test_audio_fingerprint_banded_matches_brute_force(spark):
     fps = {r["doc_id"]: r["afp"]
            for r in multimodal.audio_fingerprint(clips).collect()}
     assert len(fps) == 40
-    want = {
-        (a, b, bin(fps[a] ^ fps[b]).count("1"))
-        for a in fps for b in fps
-        if a < b and bin(fps[a] ^ fps[b]).count("1") <= 2
-    }
-    got = {tuple(r) for r in
-           multimodal.audio_fingerprint_near_dups(
-               clips, max_hamming=2).collect()}
-    assert got == want and want
+    for max_h in (2, 3):  # 3 = the 4-band pigeonhole bound
+        want = {
+            (a, b, bin(fps[a] ^ fps[b]).count("1"))
+            for a in fps for b in fps
+            if a < b and bin(fps[a] ^ fps[b]).count("1") <= max_h
+        }
+        got = {tuple(r) for r in multimodal.audio_fingerprint_near_dups(
+            clips, max_hamming=max_h).collect()}
+        assert got == want and want
     # n_frames > available full frames: hash over what exists
     short = multimodal.audio_fingerprint(
         multimodal.synth_wav(
@@ -719,6 +746,29 @@ def test_audio_fingerprint_banded_matches_brute_force(spark):
         frame=64, n_frames=48,
     ).collect()
     assert len(short) == 1 and short[0]["afp"] >= 0
+
+
+def test_media_near_dups_decode_once_lazily(spark):
+    """Building the dHash / audio near-dup frames runs no Spark job, and
+    the executed plan decodes the media in exactly one MapInPandas."""
+    cases = [
+        (multimodal.image_dhash_near_dups,
+         multimodal.synth_png(spark.createDataFrame(
+             [(i,) for i in range(0, 120, 3)], "doc_id long"))),
+        (multimodal.audio_fingerprint_near_dups,
+         multimodal.synth_wav(spark.createDataFrame(
+             [(i,) for i in range(0, 200, 5)], "doc_id long"))),
+    ]
+    tracker = spark.sparkContext.statusTracker()
+    for near_dups, media in cases:
+        before = len(tracker.getJobIdsForGroup(None) or [])
+        df = near_dups(media, max_hamming=2)
+        after = len(tracker.getJobIdsForGroup(None) or [])
+        assert after == before, f"{near_dups.__name__} ran jobs at build"
+        assert df.collect()
+        # the AQE plan as executed (final stages, not the initial plan)
+        plan = df._jdf.queryExecution().executedPlan().executedPlan()
+        assert plan.toString().count("MapInPandas") == 1, plan.toString()
 
 
 def test_video_container_walk_and_keyframes(spark):
