@@ -92,11 +92,12 @@ def handle_query(
     given, DDL statements (CREATE DATABASE, …) are dispatched to it first,
     mirroring the statement_executor.go dispatch table.
 
-    ``chunk_size`` / ``max_row_limit`` drive the streaming emit loop
-    (statement_executor.go:1144-1193): results are pulled through
-    ``toLocalIterator`` in per-series chunks, never fully collected, and
-    truncated (with ``"partial": true``) at ``max_row_limit`` rows like
-    the reference's MaxRowLimit.
+    ``chunk_size`` / ``max_row_limit`` drive the emit loop
+    (statement_executor.go:1144-1193): each result is collected once and
+    cut into per-series chunks, and truncated (with ``"partial": true``)
+    at ``max_row_limit`` rows like the reference's MaxRowLimit — the cap
+    is a ``limit`` in the plan, so no more than ``max_row_limit + 1`` rows
+    reach the driver.
     """
     from opengemini_spark.ddl import QueryParseError
 
@@ -309,7 +310,7 @@ def handle_query(
                 cols = [c for c in df.columns if c != "__m"]
                 blocks: list[dict] = []
                 cur = None
-                for r in df.orderBy("__m", *cols).toLocalIterator():
+                for r in df.orderBy("__m", *cols).collect():
                     if cur is None or cur["name"] != r["__m"]:
                         cur = {
                             "name": r["__m"], "columns": cols, "values": [],
@@ -808,7 +809,7 @@ def handle_prom_query_range_cached(
                 spark, sf_dir, registry, promql,
                 s_us // us, e_us // us, step_s,
             )
-            return [r.asDict() for r in df.toLocalIterator()]
+            return [r.asDict() for r in df.collect()]
 
         key = cache.key(promql, step_s * us, start_s * us)
         rows = cache.do(
@@ -947,7 +948,7 @@ def handle_prom_read(
     key = None
     for r in (
         df.orderBy(*[F.col(c).cast("string") for c in label_cols], "time_ns")
-        .toLocalIterator()
+        .collect()
     ):
         k = tuple(str(r[c]) for c in label_cols)
         if not out or k != key:

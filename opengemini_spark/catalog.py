@@ -14,8 +14,10 @@ plus a derived µs ``ts`` TimestampType for Spark window ops (SURVEY.md §1.2).
 
 from __future__ import annotations
 
+import functools
 import os
 import re
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,10 +46,33 @@ def _ensure_nanos_as_long(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+@functools.lru_cache(maxsize=256)
+def _file_schema(spark: SparkSession, path: str, mtime_ns: int, size: int):
+    # keyed on the file's identity: a rewritten file (new mtime or size)
+    # misses and is inferred afresh. The session is part of the key because
+    # inference reads its conf (nanosAsLong).
+    return spark.read.parquet(path).schema
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet`` that infers a regular file's schema once per
+    (mtime, size): a plain read runs a footer-reading Spark job on every
+    call. A directory or a missing path takes the plain read, so callers
+    see the same PATH_NOT_FOUND error as before."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    schema = _file_schema(spark, path, st.st_mtime_ns, st.st_size)
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table, normalizing the time columns."""
     _ensure_nanos_as_long(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # Normalize to the openGemini time model regardless of how the driver
         # generated the file: TIMESTAMP(NANOS) reads as int64 ns under the

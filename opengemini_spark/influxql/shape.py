@@ -58,15 +58,16 @@ def iter_influx_blocks(
     value_tie_desc: bool = False,
     presorted: bool = False,
 ):
-    """Stream series blocks without materializing the result on the driver.
+    """Cut the ordered result into series blocks.
 
     The emit loop of ``statement_executor.go:1144-1193``: rows arrive
     already ordered (tags → time → values, Spark-side sort), the driver
     cuts a block when the tag-set changes or ``chunk_size`` fills, and
     stops — marking the open block ``partial`` — once ``max_rows`` total
     rows have been emitted (the reference's MaxRowLimit truncation).
-    ``toLocalIterator`` holds one Spark partition at a time, so a raw
-    ``SELECT *`` over a large measurement no longer OOMs the driver.
+    The rows come from one ``collect``: the response body holds every
+    row anyway, and ``max_rows`` is a ``limit`` in the plan, so a capped
+    query never brings more than ``max_rows + 1`` rows to the driver.
     """
     from pyspark.sql import functions as F
 
@@ -139,11 +140,18 @@ def iter_influx_blocks(
         sort_exprs.append(_col("__skey_t").asc())
     src = df.orderBy(*sort_exprs) if sort_exprs else df
 
+    if max_rows is not None:
+        # one row past the cap tells a truncated result from one of
+        # exactly max_rows rows, which is complete
+        rows = src.limit(max_rows + 1).collect()
+        truncated = len(rows) > max_rows
+        rows = rows[:max_rows]
+    else:
+        rows, truncated = src.collect(), False
+
     blk: dict | None = None
     blk_key: tuple | None = None
-    emitted = 0
-    it = src.toLocalIterator()
-    for r in it:
+    for r in rows:
         # a null tag renders as the empty string (InfluxDB series key
         # semantics — server_test.go Null_Aggregate: tags {"country": ""})
         key = tuple("" if r[t] is None else str(r[t]) for t in tag_cols)
@@ -171,16 +179,9 @@ def iter_influx_blocks(
         vals = [_fmt_time(r[time_col], epoch)] if has_time else []
         vals += [r[c] for c in value_cols]
         blk["values"].append(vals)
-        emitted += 1
-        if max_rows is not None and emitted >= max_rows:
-            # partial only when truncation actually happened: peek one row
-            # ahead, so an exact-limit result is not flagged (a result of
-            # exactly max_rows rows is complete)
-            if next(it, None) is not None:
-                blk["partial"] = True
-            yield blk
-            return
     if blk is not None:
+        if truncated:
+            blk["partial"] = True
         yield blk
 
 

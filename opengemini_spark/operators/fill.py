@@ -55,18 +55,16 @@ def fill_time_spine(
     fill(none) still drops those windows and fill(previous) overwrites
     them — so the zero substitution applies only in null mode.
     """
-    if start_ns is None or end_ns is None:
-        bounds = df.agg(
-            F.min(bucket_col).alias("lo"), F.max(bucket_col).alias("hi")
-        ).first()
-        if bounds is None or bounds["lo"] is None:
-            return df
-        start_ns = start_ns if start_ns is not None else bounds["lo"]
-        end_ns = end_ns if end_ns is not None else bounds["hi"]
-
-    buckets = F.explode(
-        F.sequence(F.lit(start_ns), F.lit(end_ns), F.lit(interval_ns))
-    ).alias(bucket_col)
+    # an omitted bound is a scalar subquery over df, so it is computed when
+    # the plan runs, not while it is built; on an empty df it is null, the
+    # sequence is null and the spine has no rows
+    lo = F.lit(start_ns) if start_ns is not None else (
+        df.agg(F.min(bucket_col)).scalar()
+    )
+    hi = F.lit(end_ns) if end_ns is not None else (
+        df.agg(F.max(bucket_col)).scalar()
+    )
+    buckets = F.explode(F.sequence(lo, hi, F.lit(interval_ns))).alias(bucket_col)
     if dims:
         # explode the bucket sequence PER SERIES instead of crossJoining a
         # spine: same grid, but the plan stays series-partitioned (no

@@ -58,9 +58,9 @@ def _label_sig(label_cols: list[str]):
 def _ordered_rows(
     df: DataFrame, label_cols: list[str], time_col: str | None
 ):
-    """Stream rows ordered (label signature, then time) via
-    ``toLocalIterator`` — never a full driver collect (the reference's
-    chunked HTTP sender shape; VERDICT r1 "what's wrong" #3)."""
+    """Collect rows ordered (label signature, then time). The response
+    body holds every row, so one ``collect`` is the cheapest way to the
+    driver."""
     from pyspark.sql import functions as F
 
     sort = [_label_sig(label_cols).asc()] if label_cols else []
@@ -70,7 +70,7 @@ def _ordered_rows(
         sort.append(F.col("__name__").asc_nulls_first())
     if time_col is not None:
         sort.append(F.col(time_col).asc())
-    return (df.orderBy(*sort) if sort else df).toLocalIterator()
+    return (df.orderBy(*sort) if sort else df).collect()
 
 
 def to_prom_matrix(
@@ -80,7 +80,7 @@ def to_prom_matrix(
     time_col: str = "t",
     value_col: str = "value",
 ) -> dict:
-    """Stream a (labels…, t µs, value) result into the range-query shape."""
+    """Shape a (labels…, t µs, value) result into the range-query matrix."""
     ordered: list[dict] = []
     key: tuple | None = None
     for r in _ordered_rows(df, label_cols, time_col):
@@ -163,9 +163,9 @@ def to_prom_vector(
 
     if order in ("asc", "desc"):
         col = F.col(value_col)
-        it = df.orderBy(
+        rows = df.orderBy(
             col.asc() if order == "asc" else col.desc()
-        ).toLocalIterator()
+        ).collect()
     elif order and order.startswith(("label:", "label_desc:")):
         desc = order.startswith("label_desc:")
         keys = order.split(":", 1)[1].split(",")
@@ -173,12 +173,12 @@ def to_prom_vector(
             (F.col(k).desc() if desc else F.col(k).asc())
             for k in keys if k in df.columns
         ]
-        it = df.orderBy(*cols).toLocalIterator() if cols \
+        rows = df.orderBy(*cols).collect() if cols \
             else _ordered_rows(df, label_cols, None)
     else:
-        it = _ordered_rows(df, label_cols, None)
+        rows = _ordered_rows(df, label_cols, None)
     out = []
-    for r in it:
+    for r in rows:
         out.append(
             {
                 "metric": {

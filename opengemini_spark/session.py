@@ -10,6 +10,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries in Spark's JVM-wide cache of compiled whole-stage classes
+# (spark.sql.codegen.cache.maxEntries, a static conf: it only takes effect
+# when the session is built). Spark's default of 100 is smaller than one
+# pass of this engine's working set, so the LRU evicts every class before
+# it is reused and each pass Janino-compiles all of them again. Counted
+# with CodegenMetrics on the perfbench workloads (seed 1, 4 vCPUs):
+# - curate: the warm-up compiles 329 distinct classes; at 100 entries
+#   every pass recompiles ~355, with room for all of them 17 on the first
+#   pass (classes that inline the pass's id-range literals), then 0-8;
+# - serve: the warm-up compiles ~280; at 100 entries every step (a write
+#   cycle and a nine-panel refresh) recompiles 240-290, with room ~50
+#   classes the cache has not seen before.
+# 2000 holds both hot sets several times over.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def get_spark(
     app_name: str = "opengemini-spark",
@@ -44,6 +59,7 @@ def get_spark(
         # read parquet TIMESTAMP(NANOS) as int64 ns (openGemini time model)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

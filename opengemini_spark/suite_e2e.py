@@ -9,9 +9,8 @@ Each entry drives the same handler the server mode uses
 (`api.handle_query` / `handle_query_chunked` /
 `handle_prom_query_range_cached`), then lifts the emitted JSON back into
 a DataFrame for the driver's comparison. The lift is driver-side by
-construction (the JSON emitter already materialized the rows through
-``toLocalIterator``); result sizes are the aggregate/series shapes the
-reference serves, not raw scans.
+construction (the JSON emitter already collected the rows); result sizes
+are the aggregate/series shapes the reference serves, not raw scans.
 """
 
 from __future__ import annotations

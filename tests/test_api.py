@@ -147,6 +147,10 @@ def test_chunked_emission_and_max_row_limit(spark, sf_dir):
     assert sum(len(b["values"]) for b in cb) == 7
     assert cb[-1]["partial"] is True
 
+    # a cap equal to the result size truncates nothing: no partial
+    exact = handle_query(spark, sf_dir, q, epoch="ns", max_row_limit=50)
+    assert exact == full
+
 
 def test_prom_remote_write_read_roundtrip(spark, tmp_path):
     """prom write → partitioned storage → prom read (handler_prom.go

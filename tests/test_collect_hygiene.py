@@ -32,6 +32,23 @@ ALLOWLIST = {
         "tag-index materialization the reference's meta layer performs "
         "(show_tag_values_executor.go collects all values to the "
         "coordinator before the limit slice)",
+    # response shaping: each of these builds an in-memory JSON body that
+    # holds every collected row, so the collect brings to the driver no
+    # more than the response itself; a max_row_limit cap is a limit in
+    # the plan (iter_influx_blocks)
+    ("influxql/shape.py", "iter_influx_blocks"):
+        "uncapped InfluxQL result: every row goes into the response body",
+    ("promql/shape.py", "_ordered_rows"):
+        "PromQL matrix/vector: every row goes into the response body",
+    ("promql/shape.py", "to_prom_vector"):
+        "sorted PromQL vector: every row goes into the response body",
+    ("api.py", "handle_query"):
+        "SHOW TAG KEYS/VALUES, FIELD KEYS: every row goes into the "
+        "per-measurement response blocks",
+    ("api.py", "eval_fn"):
+        "PromQL results-cache fill: the extent's rows are the cached value",
+    ("api.py", "handle_prom_read"):
+        "remote read: every sample goes into the response timeseries",
 }
 
 

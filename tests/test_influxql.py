@@ -229,6 +229,31 @@ def test_nested_transform_derivative(spark, sf_dir):
         assert r["derivative"] == pytest.approx(expected)
 
 
+def test_nested_transform_plans_without_spark_jobs(spark, sf_dir):
+    """The inner aggregate of derivative(mean(...)) is planned without the
+    WHERE clause, so its fill spine takes its bounds from the data. Those
+    bounds are a subquery of the plan: building the plan runs no Spark
+    job (nor does the table load, once the file's schema is known)."""
+    from opengemini_spark.influxql.planner import Planner
+
+    q = (
+        "SELECT derivative(mean(value), 1h) FROM events "
+        "WHERE time >= '2024-01-05T00:00:00Z' AND time < '2024-01-12T00:00:00Z' "
+        "GROUP BY time(1h), event_type"
+    )
+    load_table(spark, sf_dir, "events")
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None) or [], default=-1)
+    df = Planner(spark, sf_dir).plan(parse(q))
+    after = max(tracker.getJobIdsForGroup(None) or [], default=-1)
+    assert after == before, "planning launched Spark jobs"
+    rows = df.collect()
+    assert rows
+    assert all(
+        1704412800 * 10**9 <= r["time"] < 1705017600 * 10**9 for r in rows
+    )
+
+
 def test_nested_transform_cumsum_and_moving(spark, sf_dir):
     cs = query(
         spark, sf_dir,

@@ -87,6 +87,27 @@ def test_fill_value_and_none(spark):
     assert none.count() == 5
 
 
+def test_fill_implicit_bounds_from_data(spark):
+    """Omitted bounds are the data's min/max bucket, computed inside the
+    plan: a series without dims spans them, and an empty input fills
+    nothing, with or without dims."""
+    agg = window_agg(
+        _cpu(spark).filter("host = 'a'"), "time_ns", SECOND,
+        [F.sum("value").alias("v")],
+    )
+    rows = fill_time_spine(agg, "bucket_ns", SECOND, [], ["v"], "value", 0)
+    assert sorted((r["bucket_ns"], r["v"]) for r in rows.collect()) == [
+        (0, 1.0), (SECOND, 2.0), (2 * SECOND, 0.0), (3 * SECOND, 4.0)
+    ]
+    empty = window_agg(
+        _cpu(spark).filter("value < 0"), "time_ns", SECOND,
+        [F.sum("value").alias("v")], ["host"],
+    )
+    for dims in (["host"], []):
+        out = fill_time_spine(empty, "bucket_ns", SECOND, dims, ["v"], "value", 0)
+        assert out.count() == 0
+
+
 def test_first_last(spark):
     first = sel.first_last_agg(_cpu(spark), "time_ns", "value", ["host"], "first")
     got = {r["host"]: r["value"] for r in first.collect()}
