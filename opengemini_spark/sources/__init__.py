@@ -9,5 +9,4 @@ machinery disappears.
 from opengemini_spark.sources.line_protocol import (  # noqa: F401
     LP_SCHEMA,
     parse_line_protocol,
-    parse_line_protocol_df,
 )

@@ -7,21 +7,22 @@ Format (reference parser ``lib/util/lifted/vm/protoparser/influx/parser.go``):
 Field values: float (``1.5``), integer (``5i``), unsigned (``5u``), string
 (``"s"``), boolean (``t/T/true/f/F/false``).
 
-Spark-first: the hot path is an Arrow-batched ``mapInPandas`` (the same
-shape the reference's streamparser has — batch in, columnar out), emitting
-a normalized long format ``(measurement, tags map, field name, field
-value typed, time_ns)``. Batch ingestion then pivots fields per
-measurement into the catalog's wide table; escape handling covers the
-``\\,`` ``\\ `` ``\\=`` cases.
+Each request-sized batch is parsed once, on the driver (the reference
+parses a ``/write`` body in ``ts-sql`` before it routes rows,
+handler.go:1488), into a normalized long format ``(measurement, tags map,
+field name, field value typed, time_ns)`` handed to Spark as a local
+relation. Batch ingestion then pivots fields per measurement into the
+catalog's wide table; escape handling covers the ``\\,`` ``\\ `` ``\\=``
+cases.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -53,12 +54,15 @@ LP_SCHEMA = StructType(
         StructField("akey", StringType()),
     ]
 )
+_LP_ARROW_SCHEMA = to_arrow_schema(LP_SCHEMA)
 
 _UNESCAPED_SPLIT = {
     ",": re.compile(r"(?<!\\),"),
     " ": re.compile(r"(?<!\\) "),
     "=": re.compile(r"(?<!\\)="),
 }
+# the measurement token ends at the first UNESCAPED comma or space
+_MEASUREMENT_TOKEN = re.compile(r"^(?:\\.|[^,\\ ])*")
 
 
 def _unescape(s: str) -> str:
@@ -67,9 +71,7 @@ def _unescape(s: str) -> str:
 
 def valid_measurement_name(name: str) -> bool:
     """ValidMeasurementName (meta/validator.go:30): non-empty, printable,
-    none of ``, ; / \\`` and not "."/"..". The ONE home of the rule —
-    the write edge (api.handle_write) and the parser both call it, with
-    the same ``_unescape`` semantics, so they cannot drift."""
+    none of ``, ; / \\`` and not "."/".."."""
     return not (
         not name
         or name in (".", "..")
@@ -149,9 +151,9 @@ def _unescape_string_field(s: str) -> str:
 
 
 class InvalidFieldValueError(ValueError):
-    """A field value the line-protocol grammar rejects outright (NaN/Inf
-    floats): the whole write request fails, unlike type-conflict partial
-    drops."""
+    """A line the line-protocol grammar rejects outright (a NaN/Inf float
+    value, an invalid measurement name): the whole write request fails,
+    unlike type-conflict partial drops."""
 
 
 def parse_line(line: str, default_time_ns: int = 0) -> list[dict]:
@@ -159,6 +161,13 @@ def parse_line(line: str, default_time_ns: int = 0) -> list[dict]:
     line = line.strip()
     if not line or line.startswith("#"):
         return []
+    # an invalid name rejects the WHOLE write (errno.InvalidMeasurement —
+    # server_write_test.go TestServer_Write_InvalidMeasurement), checked
+    # before any per-point problem could drop the line instead. Only
+    # \\, \\space \\= are escapes: a literal backslash stays and is invalid
+    name = _unescape(_MEASUREMENT_TOKEN.match(line).group(0))
+    if not valid_measurement_name(name):
+        raise InvalidFieldValueError(f"invalid measurement name: {name}")
     parts = _split_sections(line)
     if len(parts) < 2:
         raise ValueError(f"line protocol: missing fields in {line!r}")
@@ -176,12 +185,10 @@ def parse_line(line: str, default_time_ns: int = 0) -> list[dict]:
             merged.append(p)
     key_parts = merged
     measurement = _unescape(key_parts[0])
-    # the reference rejects the write with errno.InvalidMeasurement
-    # (server_write_test.go TestServer_Write_InvalidMeasurement)
     if not valid_measurement_name(measurement):
-        raise InvalidFieldValueError(
-            f"invalid measurement name: {measurement}"
-        )
+        # the tag-array regrouping widened the token (m[a,b] …): the
+        # point is malformed and drops, the rest of the batch lands
+        raise ValueError(f"invalid measurement name: {measurement}")
     tags = {}
     array_tags: dict[str, list[str]] = {}
     for t in key_parts[1:]:
@@ -271,54 +278,40 @@ def parse_line(line: str, default_time_ns: int = 0) -> list[dict]:
     return list(by_field.values())
 
 
-def parse_line_protocol_df(
-    lines: DataFrame, line_col: str = "value",
-    default_time_ns: int = 0,
+def parse_line_protocol(
+    spark, lines: list[str], default_time_ns: int = 0,
 ) -> DataFrame:
-    """Arrow-batched parse of a DataFrame of raw lines (batch or streaming).
+    """Parse an in-memory batch of lines on the driver into ``LP_SCHEMA``
+    rows, handed to Spark as one Arrow local relation: no Spark job and no
+    Python worker. ``line_no`` is the line's index in ``lines``.
 
-    Works on ``spark.read.text`` / ``readStream`` sources — the streaming
-    ingest path is this plus a ``writeStream`` sink.
+    A bad point (duplicate tag, intra-line type conflict) is dropped and
+    the rest of the batch lands (handler.go partial-write response); an
+    ``InvalidFieldValueError`` (NaN/Inf value, invalid measurement name)
+    rejects the whole batch.
 
     ``default_time_ns`` stamps points written without a timestamp — the
     reference server uses its own now() (models.ParsePointsWithPrecision;
     MultiMeasurementsInDifferentRp relies on the stamp landing *after*
     the query's upper time bound).
     """
-    src = lines.select(
-        F.col(line_col).cast("string").alias("line"),
-        # batch-order ordinal (partition-major): later lines carry larger
-        # ids, so the pivot's last-wins merge is deterministic
-        F.monotonically_increasing_id().alias("__line"),
+    out: list[dict] = []
+    for no, line in enumerate(lines):
+        try:
+            rows = parse_line(line, default_time_ns)
+        except InvalidFieldValueError:
+            raise
+        except ValueError:
+            continue
+        for row in rows:
+            row["line_no"] = no
+            out.append(row)
+    # an Arrow table, not pandas: a pandas int column holding None turns
+    # float64 and loses int64 precision; the table is a LocalRelation
+    # whatever the session's Arrow setting, empty batches included
+    return spark.createDataFrame(
+        pa.Table.from_pylist(out, schema=_LP_ARROW_SCHEMA), LP_SCHEMA
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for line, no in zip(pdf["line"], pdf["__line"]):
-                try:
-                    rows = parse_line(line, default_time_ns)
-                except ValueError:
-                    # partial write: a bad point (duplicate tag, intra-line
-                    # type conflict) is dropped, the rest of the batch
-                    # lands (handler.go partial-write response)
-                    continue
-                for row in rows:
-                    row["line_no"] = int(no)
-                    out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in LP_SCHEMA.fields]
-            )
-
-    return src.mapInPandas(run, LP_SCHEMA)
-
-
-def parse_line_protocol(
-    spark, lines: list[str], default_time_ns: int = 0,
-) -> DataFrame:
-    """Convenience: parse an in-memory batch of lines."""
-    df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    return parse_line_protocol_df(df, default_time_ns=default_time_ns)
 
 
 def to_measurement_table(
@@ -330,9 +323,11 @@ def to_measurement_table(
 
     Field types follow the line-protocol value class (handler.go:1488 →
     models.Point field types): float stays double, int stays int64, string
-    and boolean keep their own columns — not silently dropped. One small
-    driver-side aggregation discovers the (field → type, tag keys) schema,
-    which is the schema-on-write metadata lookup, not a data scan.
+    and boolean keep their own columns — not silently dropped. The
+    (field → type, tag keys) schema comes from plain Python over the
+    measurement's rows: on the posted batch's local relation that collect
+    runs no Spark job — the schema-on-write metadata lookup, not a data
+    scan.
 
     A field's type is decided by its FIRST point (or the already-registered
     ``field_types`` from the measurement sidecar, Spark simpleString form);
@@ -349,27 +344,23 @@ def to_measurement_table(
         .when(F.col("f_float").isNotNull(), "float")
     )
     m = m.withColumn("__cls", cls_expr)
-    # one pass: per-field first-point class + the union of tag keys
-    schema_rows = (
-        m.select("field", "__cls", "line_no",
-                 F.map_keys("tags").alias("ks"))
-        .groupBy("field")
-        .agg(
-            F.min_by("__cls", "line_no").alias("first_cls"),
-            F.array_distinct(F.flatten(F.collect_set("ks"))).alias("tag_keys"),
-        )
-        .collect()
-    )
-    tag_keys = sorted({k for r in schema_rows for k in r["tag_keys"]})
+    # per-field first-point (line_no, class) + the union of tag keys
+    first: dict[str, tuple[int, str]] = {}
+    tag_set: set[str] = set()
+    for field, cls, no, ks in m.select(
+        "field", "__cls", "line_no", F.map_keys("tags")
+    ).collect():
+        tag_set.update(ks)
+        if field not in first or no < first[field][0]:
+            first[field] = (no, cls)
+    tag_keys = sorted(tag_set)
     _SPARK_CLS = {
         "bigint": "int", "double": "float", "string": "str",
         "boolean": "bool",
     }
     decided = {
-        r["field"]: _SPARK_CLS.get(
-            (field_types or {}).get(r["field"], ""), r["first_cls"]
-        )
-        for r in schema_rows
+        f: _SPARK_CLS.get((field_types or {}).get(f, ""), cls)
+        for f, (_, cls) in sorted(first.items())
     }
     # drop conflicting FIELD occurrences (the point survives if any of
     # its other fields are clean — Write_MultiField_FieldTypeConflict
@@ -382,8 +373,7 @@ def to_measurement_table(
     if conds is not None:
         m = m.filter(~conds)
 
-    def _field_expr(r) -> F.Column:
-        cls = decided[r["field"]]
+    def _field_expr(name: str, cls: str) -> F.Column:
         if cls == "str":
             src = F.col("f_str")
         elif cls == "bool":
@@ -395,13 +385,13 @@ def to_measurement_table(
         # LAST matching line wins (point merge: the newest duplicate
         # within a batch replaces earlier ones — server_test.go Join_Table
         # writes table2,tk=c twice at one instant and reads the second)
-        cond = F.col("field") == r["field"]
+        cond = F.col("field") == name
         return F.max_by(
             F.when(cond, src),
             F.when(cond & src.isNotNull(), F.col("line_no")),
-        ).alias(r["field"])
+        ).alias(name)
 
-    field_exprs = [_field_expr(r) for r in sorted(schema_rows, key=lambda r: r["field"])]
+    field_exprs = [_field_expr(n, c) for n, c in decided.items()]
     # tag-array rows group by their ORIGINAL array key as well: a point
     # expanded from tk=[…,tv9,…] must not merge with a plain tk=tv9 point
     # at the same instant (TestServer_TagArray — the array form is the

@@ -127,8 +127,10 @@ def write_measurement(df: DataFrame, root: str) -> None:
         df = df.withColumn(SEQ_COL, F.lit(base))
         if "__ln" in df.columns:
             # rebase the batch-local line ordinal onto the sequence stamp:
-            # (__seq, line) collapses to one global write-order long
-            # (batches are stamped ≥µs apart; ordinals are small ints)
+            # (__seq, line) collapses to one global write-order long.
+            # Ordinals are line indexes within the batch, and a batch takes
+            # longer to write than its line count in ns, so every point of
+            # a later batch orders after every point of this one
             df = df.withColumn("__ln", F.lit(base) + F.col("__ln"))
     _write_days(with_partition(df), root)
     if tags is not None or known or prior:

@@ -476,10 +476,19 @@ def test_parity9b_write_invalid_measurement(spark, tmp_path_factory):
         "cp\\,u,host=server01 value=1.0",     # escaped comma → literal ,
         "cpu_xxx\x00,host=server01 value=1.0",
         ". value=1",
+        # no fields: the name is checked before the point could drop
+        "c;pu",
+        "c;pu,host=a",
     ]
     for line in bad:
         with pytest.raises(ValueError, match="invalid measurement name"):
             handle_write(spark, [line], root)
+    # a NaN value on a point that drops first (duplicate tag) is a
+    # partial write, not a batch-fatal "invalid field value"
+    assert handle_write(
+        spark, [f"cpu,host=a,host=b value=NaN {T0}", f"cpu value=1 {T0}"],
+        root,
+    ) == {"written": {"cpu": 1}}
     # a dot INSIDE the name stays valid (only "." / ".." are reserved)
     assert handle_write(spark, [f"c.pu value=1 {T0}"], root) == {
         "written": {"c.pu": 1}

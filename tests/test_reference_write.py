@@ -173,3 +173,22 @@ def test_write_string_escapes(spark, sf_dir, tmp_path):
         "disk\\\\ mem",   # \\ \\ -> two
         'disk" mem\\"',   # \" -> " ; \\ -> \ ; \" -> "
     ]
+
+
+def test_write_order_across_batches(spark, sf_dir, tmp_path):
+    """Merged-stream duplicate timestamps resolve to the FIRST-written
+    point across write batches too (difference_derivative_time_duplicate
+    semantics): every point of an earlier batch orders before every point
+    of a later one, whatever line it sits on. Batch A's `s=a` points sit on
+    its last lines; batch B's `s=b` point at the same instant is B's first
+    line, so a line ordinal larger than the gap between the two batches'
+    sequence stamps would let B's point win."""
+    root = str(tmp_path / "order")
+    filler = [f"filler v={i} {i}" for i in range(6)]
+    handle_write(spark, filler + ["m,s=a v=10 2000", "m,s=a v=1 1000"], root)
+    handle_write(spark, ["m,s=b v=2 1000"] + filler[:3], root)
+    got = handle_query(
+        spark, sf_dir, "SELECT difference(v) FROM m WHERE time <= 2000",
+        epoch="ns", data_root=root,
+    )
+    assert got["results"][0]["series"][0]["values"] == [[2000, 9.0]]

@@ -1,13 +1,17 @@
-"""Ingest source tests: line protocol parse (batch + DataFrame path),
-measurement pivot, Arrow ingestion."""
+"""Ingest source tests: line protocol parse (per line + driver batch),
+measurement pivot, Arrow ingestion, and the Spark-job cost of a write."""
 
 from __future__ import annotations
+
+import uuid
 
 import pyarrow as pa
 import pytest
 
 from opengemini_spark.sources import parse_line_protocol
-from opengemini_spark.sources.line_protocol import parse_line, to_measurement_table
+from opengemini_spark.sources.line_protocol import (
+    InvalidFieldValueError, parse_line, to_measurement_table,
+)
 
 LINES = [
     "cpu,host=h1,region=eu usage=0.5,idle=99i 1700000000000000001",
@@ -36,6 +40,13 @@ def test_parse_line_errors():
     assert parse_line("# comment") == []
     with pytest.raises(ValueError):
         parse_line("cpu_no_fields")
+    # an invalid name is batch-fatal even on a line with no fields
+    with pytest.raises(InvalidFieldValueError, match="measurement name"):
+        parse_line("c;pu")
+    # a tag-array bracket that swallows the name's comma drops the point
+    with pytest.raises(ValueError, match="measurement name") as e:
+        parse_line("a[b,c] f=1")
+    assert not isinstance(e.value, InvalidFieldValueError)
 
 
 def test_parse_df_and_pivot(spark):
@@ -52,6 +63,60 @@ def test_parse_df_and_pivot(spark):
     assert set(cpu.columns) == {
         "time_ns", "host", "region", "usage", "idle", "__ln", "__akey"
     }
+
+
+def _spark_jobs(spark, fn):
+    """``fn()``'s result and the Spark jobs it submitted, counted under a
+    job group of its own (a query leaves its thread in group "")."""
+    sc = spark.sparkContext
+    group = f"test-sources-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_parse_is_a_local_relation_without_spark_jobs(spark):
+    """The batch is parsed on the driver: building the DataFrame, and the
+    pivot's schema collect over it, submit no Spark job (no Python-worker
+    parse), and the optimized plan is a LocalRelation."""
+    parsed, jobs = _spark_jobs(spark, lambda: parse_line_protocol(spark, LINES))
+    assert jobs == []
+    plan = parsed._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    _, jobs = _spark_jobs(spark, lambda: to_measurement_table(parsed, "cpu"))
+    assert jobs == []
+    # line_no is the line's index in the batch
+    assert sorted({r["line_no"] for r in parsed.collect()}) == [0, 1, 2, 3]
+
+
+def test_parse_keeps_int64_precision(spark):
+    """An int field beside a point without it keeps all 64 bits (a float
+    detour would round 2**63 - 1)."""
+    parsed = parse_line_protocol(
+        spark, ["m v=9223372036854775807i 1", "m w=1 2"]
+    )
+    assert [r["f_int"] for r in parsed.orderBy("time_ns").collect()] == [
+        9223372036854775807, None,
+    ]
+
+
+def test_write_of_two_measurements_takes_at_most_six_jobs(spark, tmp_path):
+    """A request-sized write runs only the per-measurement writes: no
+    worker parse, no cached batch, no discovery or schema job."""
+    from opengemini_spark.api import handle_write
+
+    lines = [
+        f"{m},host=h{i % 3} v={i},n={i}i {1700000000000000000 + i}"
+        for i in range(40) for m in ("cpu", "mem")
+    ]
+    got, jobs = _spark_jobs(
+        spark, lambda: handle_write(spark, lines, str(tmp_path))
+    )
+    assert got == {"written": {"cpu": 40, "mem": 40}}
+    assert len(jobs) <= 6, f"write submitted {len(jobs)} Spark jobs"
 
 
 def test_arrow_ingest(spark):
