@@ -12,8 +12,8 @@ string columns = tags, numeric columns = fields, ``time_ns`` = time.
 from __future__ import annotations
 
 import re
-
 from datetime import datetime, timezone
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
@@ -142,7 +142,6 @@ class Planner:
         names are recorded for series naming."""
         import os as _os
         import re as _re
-        from functools import reduce
 
         from opengemini_spark.catalog import TABLES
 
@@ -1791,8 +1790,6 @@ class Planner:
         independently; rows merge by name with missing columns null and a
         leg-indexed series key so the stream orders (time, leg, series)
         — Constant_Column 'multi mst query normal with alias'."""
-        from functools import reduce
-
         dfs = []
         for i, (leg, _alias) in enumerate(src.legs):
             df, _tags, _dims = self._derived_leg(leg)
@@ -2458,8 +2455,6 @@ class Planner:
         "multi-agg"): each runs independently over the source, results
         align by (time, dims) full-outer in projection order; a transform
         over a nonexistent field contributes an all-null column."""
-        from functools import reduce
-
         gcols = [f"__tag_{t}" for t in stmt.group_tags]
         frames: list[DataFrame] = []
         null_cols: list[str] = []
@@ -2503,6 +2498,38 @@ class Planner:
             out = out.limit(stmt.limit)
         return out
 
+    def _bucket_series(
+        self, stmt: ast.SelectStatement, df: DataFrame, call: ast.Call,
+        edges_emit: bool,
+    ) -> DataFrame:
+        """``call`` per GROUP BY time bucket and tag-set as a ``__v``
+        column, filled, in no order: the input of the per-series transform
+        or recurrence of a nested call (``derivative(mean(v))``).
+
+        The fill spine takes the statement's time range as literal bounds
+        whenever the buckets it adds at the range's edges cannot reach the
+        output: fill(null) leaves them null, and the consumer emits nothing
+        for a null value (``edges_emit`` False). Otherwise the spine runs
+        from the first to the last bucket that holds data, as it does when
+        the query gives no range.
+        """
+        where = None
+        if not edges_emit and stmt.fill in (None, "null", "none"):
+            conds = self._time_conds(stmt.where)
+            if conds:
+                where = reduce(
+                    lambda a, b: ast.BinaryExpr("and", a, b), conds
+                )
+        inner = ast.SelectStatement(
+            fields=[ast.Field(call, "__v")],
+            source="__sub__",
+            where=where,
+            group_time=stmt.group_time,
+            group_tags=stmt.group_tags,
+            fill=stmt.fill,
+        )
+        return self._agg_series(inner, df)
+
     def _plan_transform(
         self, stmt: ast.SelectStatement, df: DataFrame, f: ast.Field
     ) -> DataFrame:
@@ -2515,18 +2542,15 @@ class Planner:
         if isinstance(inner_call, ast.VarRef):
             return self._plan_raw_transform(stmt, df, f)
         assert stmt.group_time is not None, f"{outer.name} requires GROUP BY time"
-        inner = ast.SelectStatement(
-            fields=[ast.Field(inner_call, "__v")],
-            source="__sub__",
-            group_time=stmt.group_time,
-            group_tags=stmt.group_tags,
-            fill=stmt.fill,
+        name = outer.name
+        agg = self._bucket_series(
+            stmt, df, inner_call,
+            # both emit a row at an empty bucket that follows data
+            edges_emit=name in ("cumulative_sum", "elapsed"),
         )
-        agg = self._plan_agg(inner, df)
 
         w = Window.partitionBy(*stmt.group_tags).orderBy("time")
         v, t = F.col("__v"), F.col("time")
-        name = outer.name
         out_name = self._out_name(f, name)
         if name in ("derivative", "non_negative_derivative"):
             unit_ns = (
@@ -3032,14 +3056,9 @@ class Planner:
         tags = stmt.group_tags
         if isinstance(inner_call, ast.Call):
             assert stmt.group_time is not None, f"{name} requires GROUP BY time"
-            inner = ast.SelectStatement(
-                fields=[ast.Field(inner_call, "__v")],
-                source="__sub__",
-                group_time=stmt.group_time,
-                group_tags=tags,
-                fill=stmt.fill,
-            )
-            src = self._plan_agg(inner, df).filter(F.col("__v").isNotNull())
+            src = self._bucket_series(
+                stmt, df, inner_call, edges_emit=False
+            ).filter(F.col("__v").isNotNull())
         else:
             src = df.select(
                 F.col(TIME_COL).alias("time"), *tags,
@@ -3099,15 +3118,9 @@ class Planner:
             ).orderBy(*(["time"] + list(tags)))
             return self._stream_limit(out, stmt, tags)
 
-        # the recurrence returns (tags, rn, value); re-attach bucket times by
-        # ordinal position within each series
-        wt = Window.partitionBy(*tags).orderBy("time")
-        times = src.select(*tags, "time").withColumn(
-            "rn", F.row_number().over(wt)
-        )
-        joined = res.join(times, tags + ["rn"] if tags else ["rn"])
+        # the recurrence emits each point's time beside its value
         out = (
-            joined.select("time", *tags, F.col(col).alias(out_name))
+            res.select("time", *tags, F.col(col).alias(out_name))
             .filter(F.col(out_name).isNotNull())
             .orderBy(*(["time"] + list(tags)))
         )
@@ -3135,7 +3148,12 @@ class Planner:
             return "_".join(p for p in parts if p)
         return ""
 
-    def _plan_agg(self, stmt: ast.SelectStatement, df: DataFrame) -> DataFrame:
+    def _agg_series(
+        self, stmt: ast.SelectStatement, df: DataFrame
+    ) -> DataFrame:
+        """The statement's aggregates per (bucket, tag-set), filled, in no
+        particular order: the input of a per-series transform or
+        recurrence, which partitions and sorts by series itself."""
         self._agg_interval_ns = (
             stmt.group_time.interval_ns if stmt.group_time is not None else None
         )
@@ -3337,7 +3355,10 @@ class Planner:
             mid = [c for c in dict.fromkeys(emit_order) if c in out.columns]
             rest = [c for c in out.columns if c not in lead and c not in mid]
             out = out.select(*lead, *mid, *rest)
+        return out
 
+    def _plan_agg(self, stmt: ast.SelectStatement, df: DataFrame) -> DataFrame:
+        out = self._agg_series(stmt, df)
         order_cols = []
         if stmt.group_time is not None:
             order_cols.append(
@@ -3790,8 +3811,6 @@ class Planner:
                     ],
                 )
                 frames.append(d.select(key.alias("key")).distinct())
-            from functools import reduce
-
             if not frames:
                 return self.spark.createDataFrame([], "key string")
             out = reduce(lambda a, b: a.unionAll(b), frames)

@@ -7,14 +7,17 @@ rows ordered by time within a block (emit loop
 ``statement_executor.go:1144-1193``).
 
 This is driver-side presentation of an already-aggregated (small) result —
-the one place a collect() is correct.
+the one place a collect() is correct. The rows are collected in their
+final order from one single-partition sort (:func:`_final_order`), so the
+ordering costs no sampling job.
 """
 
 from __future__ import annotations
 
+import re
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 RFC3339 = "%Y-%m-%dT%H:%M:%SZ"
 
@@ -46,6 +49,53 @@ def _fmt_time(ns: int, epoch: str | None) -> Any:
     return ns // div
 
 
+def _scans_in_last_stage(plan: str) -> bool:
+    """Whether a physical plan's tree string reads a source in its last
+    stage, the one no exchange separates from the root. A local relation
+    carries its rows in the plan itself, so it does not count; a subquery
+    runs as plans of its own."""
+    cut = None  # column of the exchange or subquery whose subtree is skipped
+    for ln in plan.splitlines():
+        node = ln.lstrip(" :+-")
+        col = len(ln) - len(node)
+        if cut is not None and col > cut:
+            continue
+        cut = None
+        op = re.sub(r"^\*\(\d+\) ", "", node).split(" ", 1)[0]
+        if op.endswith("Exchange") or "Subquery" in op:
+            cut = col
+        elif op == "Range" or (op.endswith("Scan") and op != "LocalTableScan"):
+            return True
+    return False
+
+
+def _final_order(df: DataFrame, sort_exprs: list[Column]) -> DataFrame:
+    """``df`` sorted by ``sort_exprs`` in one partition, with no sampling job.
+
+    A global ``orderBy`` plans a range exchange, whose bounds Spark samples
+    in a job of its own before the map stage runs. The response holds
+    every row and is collected whole, so one sorted partition serves as
+    well; Catalyst also drops a global sort the planner put under it
+    through projections and filters.
+
+    The rule: ``coalesce(1)`` when the last stage reads only exchanges,
+    ``repartition(1)`` when it scans a source. An exchange below the last
+    stage holds aggregated, windowed or joined rows, about the rows of the
+    response, so reading it in one task costs nothing and adds no
+    exchange. A scan in the last stage (a bare raw read) would read every
+    file in one task under ``coalesce(1)``; ``repartition(1)`` keeps the
+    scan's tasks and adds the one exchange that brings the rows together.
+    """
+    merged = df.coalesce(1).sortWithinPartitions(*sort_exprs)
+    # before it runs, an adaptive plan prints its initial plan, with every
+    # exchange in place
+    plan = merged._jdf.queryExecution().executedPlan().treeString()
+    if not _scans_in_last_stage(plan):
+        # collect() runs this frame on the plan just built
+        return merged
+    return df.repartition(1).sortWithinPartitions(*sort_exprs)
+
+
 def iter_influx_blocks(
     df: DataFrame,
     measurement: str,
@@ -61,10 +111,12 @@ def iter_influx_blocks(
     """Cut the ordered result into series blocks.
 
     The emit loop of ``statement_executor.go:1144-1193``: rows arrive
-    already ordered (tags → time → values, Spark-side sort), the driver
-    cuts a block when the tag-set changes or ``chunk_size`` fills, and
-    stops — marking the open block ``partial`` — once ``max_rows`` total
-    rows have been emitted (the reference's MaxRowLimit truncation).
+    already ordered (tags → time → values, one single-partition sort in
+    Spark by :func:`_final_order`; a ``presorted`` plan keeps its own
+    order), this loop cuts a block when the tag-set changes or
+    ``chunk_size`` fills, and stops — marking the open block ``partial`` —
+    once ``max_rows`` total rows have been emitted (the reference's
+    MaxRowLimit truncation).
     The rows come from one ``collect``: the response body holds every
     row anyway, and ``max_rows`` is a ``limit`` in the plan, so a capped
     query never brings more than ``max_rows + 1`` rows to the driver.
@@ -138,7 +190,7 @@ def iter_influx_blocks(
         # (DropSeries: the value-only series precedes field-carrying rows
         # at the same instant), the key is the final tie
         sort_exprs.append(_col("__skey_t").asc())
-    src = df.orderBy(*sort_exprs) if sort_exprs else df
+    src = _final_order(df, sort_exprs) if sort_exprs else df
 
     if max_rows is not None:
         # one row past the cap tells a truncated result from one of

@@ -6,21 +6,22 @@ them per FILL option (``influxql/ast.go:2092-2104``): null / none / number /
 previous / linear.
 
 Spark-first design (SURVEY.md §2.5 — "the biggest semantic gap vs plain
-Spark groupBy"): build a *time spine* = sequence(start, end, interval)
-crossed with the distinct series key-sets, left-join the aggregated data
-onto it, then:
+Spark groupBy"): one series exchange. The aggregated rows are grouped by
+their series key-set into a bucket → values map, the bucket sequence
+(start, end, interval) is exploded per series, and each bucket reads its
+values back from the map; then:
 
-- ``null``      → nothing (left join already yields nulls)
+- ``null``      → nothing (a missing bucket reads back nulls)
 - ``<number>``  → ``coalesce(value, lit(n))``
 - ``previous``  → ``last(value, ignorenulls=True)`` over a per-series window
 - ``linear``    → interpolate between bracketing non-null points
 
-Scale notes: the spine is ``n_series × n_windows`` rows of two columns —
-tiny relative to the input (it's the *output* shape). The distinct-series
-side is an aggregation over already-aggregated data; the join key is
-(series, bucket) which matches the groupBy partitioning, so AQE usually
-plans a broadcast of the spine. ``previous``/``linear`` use one window pass
-per series, which is the same ordered scan the reference does per chunk.
+Scale notes: the input is window_agg's output, and a series' map holds at
+most that series' buckets in range — the rows the response carries. The
+one exchange is a hash partitioning on the series key-set, which is the
+partitioning the ``previous``/``linear`` windows, a per-series transform
+or recurrence downstream, and the final sort all reuse: the filled frame
+costs one stage more than the aggregate, with no broadcast and no join.
 """
 
 from __future__ import annotations
@@ -29,6 +30,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _col(name: str):
+    """Column ref that survives '.' in tag and field names."""
+    return F.col(f"`{name}`")
 
 
 def fill_time_spine(
@@ -65,25 +71,26 @@ def fill_time_spine(
         df.agg(F.max(bucket_col)).scalar()
     )
     buckets = F.explode(F.sequence(lo, hi, F.lit(interval_ns))).alias(bucket_col)
-    if dims:
-        # explode the bucket sequence PER SERIES instead of crossJoining a
-        # spine: same grid, but the plan stays series-partitioned (no
-        # nested-loop node) and scales with the series count
-        spine = df.select(*dims).distinct().select(*dims, buckets)
-    else:
+    keys = [bucket_col, *dims]
+    rest = [c for c in df.columns if c not in keys]
+    # each series' buckets as one map: a bucket of the spine that has no
+    # data reads back null from it
+    series = df.groupBy(*map(_col, dims)).agg(
+        F.map_from_entries(
+            F.collect_list(
+                F.struct(_col(bucket_col), F.struct(*map(_col, rest)))
+            )
+        ).alias("__m")
+    )
+    if not dims:
         # gate the spine on data presence: a WHERE that matches nothing
         # yields NO series in the reference ("fill with value, WHERE no
-        # values match condition"), never a fully-filled grid. The 1-row
-        # marker is an aggregate of the already-aggregated output, not a
-        # driver collect.
-        spine = (
-            df.groupBy()
-            .agg(F.count(F.lit(1)).alias("__present"))
-            .filter(F.col("__present") > 0)
-            .select(buckets)
-        )
-
-    filled = spine.join(df, on=[bucket_col, *dims], how="left")
+        # values match condition"), never a fully-filled grid
+        series = series.filter(F.size("__m") > 0)
+    row = F.col("__m")[_col(bucket_col)]
+    filled = series.select(*map(_col, dims), buckets, "__m").select(
+        *map(_col, keys), *[row.getField(c).alias(c) for c in rest]
+    )
 
     if mode == "null" or mode == "none":
         out = filled

@@ -31,9 +31,14 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
-def _per_series_schema(id_cols: list[tuple[str, object]], out_cols: list[str]) -> StructType:
+def _per_series_schema(
+    id_cols: list[tuple[str, object]],
+    order_cols: list[tuple[str, object]],
+    out_cols: list[str],
+) -> StructType:
     fields = [StructField(n, t) for n, t in id_cols]
     fields.append(StructField("rn", LongType()))
+    fields += [StructField(n, t) for n, t in order_cols]
     fields += [StructField(c, DoubleType()) for c in out_cols]
     return StructType(fields)
 
@@ -48,12 +53,14 @@ def _apply_recurrence(
 ) -> DataFrame:
     """Run ``fn(values) -> DataFrame[out_cols]`` per series, time-ordered.
 
-    Output: series columns + ``rn`` (1-based position) + out_cols.
+    Output: series columns + ``rn`` (1-based position) + order_cols (the
+    point's own ordering values) + out_cols.
     """
-    schema_ids = [
-        (c, df.schema[c].dataType) for c in series_cols
-    ]
-    schema = _per_series_schema(schema_ids, out_cols)
+    schema = _per_series_schema(
+        [(c, df.schema[c].dataType) for c in series_cols],
+        [(c, df.schema[c].dataType) for c in order_cols],
+        out_cols,
+    )
     cols = series_cols + order_cols + [value_col]
     # mapInPandas over hash-partitioned + partition-sorted data instead of
     # groupBy().applyInPandas(): the latter makes one Arrow round-trip PER
@@ -73,6 +80,8 @@ def _apply_recurrence(
 
     def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
         out = fn(pdf[value_col].reset_index(drop=True))
+        for i, c in enumerate(order_cols):
+            out.insert(i, c, pdf[c].to_numpy())
         out.insert(0, "rn", range(1, len(out) + 1))
         for c in reversed(series_cols):
             out.insert(0, c, pdf[c].iloc[0])

@@ -19,24 +19,36 @@ import time
 _LOCK = threading.Lock()
 _NEXT = [1]
 _ACTIVE: dict[int, tuple[str, float]] = {}  # qid -> (text, start_ts)
+# the local properties setJobGroup sets, and the caller's values of them
+# while one of its queries runs (qid -> values; None = unset)
+_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+)
+_CALLER: dict[int, list[str | None]] = {}
 
 
 def attach(spark, text: str) -> int:
     """Register a query and scope the current thread's jobs to its group."""
+    sc = spark.sparkContext
+    caller = [sc.getLocalProperty(k) for k in _GROUP_PROPS]
     with _LOCK:
         qid = _NEXT[0]
         _NEXT[0] += 1
         _ACTIVE[qid] = (text, time.time())
-    spark.sparkContext.setJobGroup(
-        f"ogq-{qid}", text[:200], interruptOnCancel=True
-    )
+        _CALLER[qid] = caller
+    sc.setJobGroup(f"ogq-{qid}", text[:200], interruptOnCancel=True)
     return qid
 
 
 def detach(spark, qid: int) -> None:
+    """Unregister the query and give the thread back the job group it had
+    before ``attach`` (none, if it had none)."""
     with _LOCK:
         _ACTIVE.pop(qid, None)
-    spark.sparkContext.setJobGroup("", "")
+        caller = _CALLER.pop(qid, [None] * len(_GROUP_PROPS))
+    sc = spark.sparkContext
+    for k, v in zip(_GROUP_PROPS, caller):
+        sc.setLocalProperty(k, v)
 
 
 def kill(spark, qid: int) -> bool:

@@ -230,10 +230,11 @@ def test_nested_transform_derivative(spark, sf_dir):
 
 
 def test_nested_transform_plans_without_spark_jobs(spark, sf_dir):
-    """The inner aggregate of derivative(mean(...)) is planned without the
-    WHERE clause, so its fill spine takes its bounds from the data. Those
-    bounds are a subquery of the plan: building the plan runs no Spark
-    job (nor does the table load, once the file's schema is known)."""
+    """The inner aggregate of derivative(mean(...)) is planned with the
+    statement's WHERE time range, so its fill spine's bounds are literals
+    (an open range takes them from the data, as a subquery of the plan):
+    building the plan runs no Spark job (nor does the table load, once the
+    file's schema is known)."""
     from opengemini_spark.influxql.planner import Planner
 
     q = (

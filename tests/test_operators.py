@@ -87,6 +87,21 @@ def test_fill_value_and_none(spark):
     assert none.count() == 5
 
 
+def test_fill_keeps_the_values_of_a_null_keyed_series(spark):
+    """A series whose dim is null (points without the GROUP BY tag) is one
+    series like any other: its buckets keep their values."""
+    rows = [(None, 1 * SECOND, 5.0), (None, 3 * SECOND, 7.0), ("a", 0, 1.0)]
+    agg = window_agg(
+        spark.createDataFrame(rows, "host string, time_ns long, value double"),
+        "time_ns", SECOND, [F.sum("value").alias("v")], ["host"],
+    )
+    filled = fill_time_spine(agg, "bucket_ns", SECOND, ["host"], ["v"], "null")
+    got = {(r["host"], r["bucket_ns"]): r["v"] for r in filled.collect()}
+    assert len(got) == 8  # 2 series x 4 windows [0..3]
+    assert got[(None, SECOND)] == 5.0 and got[(None, 3 * SECOND)] == 7.0
+    assert got[(None, 0)] is None and got[(None, 2 * SECOND)] is None
+
+
 def test_fill_implicit_bounds_from_data(spark):
     """Omitted bounds are the data's min/max bucket, computed inside the
     plan: a series without dims spans them, and an empty input fills

@@ -1,9 +1,12 @@
 """Registry invariants: the driver checks only the first 50 queries()
 entries, so the ordering is part of the contract (VERDICT r1 item 2)."""
 
+import os
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from opengemini_spark import suite
 
@@ -21,14 +24,14 @@ def test_priority_window_matches_round8_rotation():
     first, then changed-semantics re-verdicts, then the COMPLETE r4-era
     freshness tail — after this window every registered entry's newest
     driver verdict is r5+."""
-    import json, pathlib
+    import json
 
     window = set(suite.PRIORITY)
     assert len(suite.PRIORITY) == 50 == len(window)
     # every registered entry with NO driver verdict in any CORRECTNESS
     # file must be in the window — first verdicts outrank rotation
     latest: dict[str, int] = {}
-    for f in pathlib.Path("/root/repo").glob("CORRECTNESS_r0*.json"):
+    for f in ROOT.glob("CORRECTNESS_r0*.json"):
         rnd = int(f.stem.split("_r0")[1])
         for k in json.loads(f.read_text()):
             latest[k] = max(latest.get(k, 0), rnd)

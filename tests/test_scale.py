@@ -3,6 +3,8 @@ shuffle-free joins, AQE configs present."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from opengemini_spark.catalog import load_table
@@ -11,6 +13,8 @@ from opengemini_spark.operators.scale import (
     salted_agg,
     write_bucketed,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_salted_agg_matches_plain(spark, sf_dir):
@@ -62,7 +66,7 @@ def test_plan_audit_previously_flagged_queries_stay_clean(spark):
     """fill spine + histogram bucketing must stay free of nested-loop
     nodes (tools/plan_audit.py found and we removed them in r2)."""
     import sys
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from plan_audit import audit
     from opengemini_spark import suite
 
@@ -77,7 +81,7 @@ def test_plan_audit_previously_flagged_queries_stay_clean(spark):
 
 def test_plan_audit_allowlist_covers_broadcast_cross(spark):
     import sys
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from plan_audit import CROSS_ALLOWED, audit
     from opengemini_spark import suite
 

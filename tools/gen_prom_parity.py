@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import importlib.util
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
@@ -48,7 +49,8 @@ EXCLUDE = {
 
 def extract(fn: str) -> str:
     spec = importlib.util.spec_from_file_location(
-        "extract_prom_cases", "/root/repo/tools/extract_prom_cases.py"
+        "extract_prom_cases",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "extract_prom_cases.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -149,7 +151,11 @@ def main() -> None:
         parts.append("")
     parts.append(f"SUITE_TAGS = {tags!r}")
     parts.append(TAIL)
-    with open("/root/repo/tests/test_reference_prom.py", "w") as f:
+    out = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tests", "test_reference_prom.py",
+    )
+    with open(out, "w") as f:
         f.write("\n".join(parts))
     print(f"wrote {len(tags)} suites")
 

@@ -33,7 +33,7 @@ from types import ModuleType
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CACHE_PATH = os.path.join(os.path.dirname(__file__), ".gate_cache.json")
 

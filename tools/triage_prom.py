@@ -9,16 +9,17 @@ from __future__ import annotations
 import importlib.util
 import io
 import json
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def load_cases(fn: str):
     spec = importlib.util.spec_from_file_location(
-        "extract_prom_cases", "/root/repo/tools/extract_prom_cases.py"
+        "extract_prom_cases", os.path.join(os.path.dirname(os.path.abspath(__file__)), "extract_prom_cases.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

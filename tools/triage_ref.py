@@ -9,17 +9,18 @@ from __future__ import annotations
 import importlib.util
 import io
 import json
+import os
 import re
 import sys
 import tempfile
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def load_cases(fn: str):
     spec = importlib.util.spec_from_file_location(
-        "extract_ref_cases", "/root/repo/tools/extract_ref_cases.py"
+        "extract_ref_cases", os.path.join(os.path.dirname(os.path.abspath(__file__)), "extract_ref_cases.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
