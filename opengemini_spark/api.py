@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession, functions as F
 
 from opengemini_spark import storage
@@ -245,7 +246,7 @@ def handle_query(
                 w = df.withColumnRenamed("time", "time_ns") if "time" in df.columns else df
                 # written-row count rides the write job as an Observation
                 # metric instead of a df.count() that re-executes the whole
-                # SELECT after the write (same fix as handle_write)
+                # SELECT after the write
                 w, obs = _observed_count(w)
                 if "time_ns" in w.columns:
                     storage.write_measurement(w, dst)
@@ -563,9 +564,9 @@ def handle_write(
     handler.go getPrecisionMultiplier): timestamps in the posted lines are
     in that unit and scale to nanoseconds.
 
-    The batch is parsed once, on the driver, into a local relation: the
-    measurement discovery and every per-measurement pivot read it with no
-    Spark job, and only the writes run jobs.
+    The batch is parsed and pivoted on the driver: each measurement
+    reaches Spark as one local relation of its wide rows, the response's
+    row counts are those rows, and only the writes run jobs.
 
     ``now_ns`` stamps points posted without a timestamp, like the
     reference server's write-time now() (handler.go → models.ParsePoints
@@ -578,23 +579,19 @@ def handle_write(
     # untimestamped points are stamped pre-scaling in the posted unit
     # (the reference truncates its now() to the write precision)
     try:
-        parsed = parse_line_protocol(
-            spark, lines, default_time_ns=now_ns // mult
-        )
+        parsed = parse_line_protocol(lines, default_time_ns=now_ns // mult)
     except InvalidFieldValueError as e:
         # batch-fatal: an invalid measurement name or a NaN/Inf field
         # value rejects the ENTIRE request before anything lands
         # (Write_InvalidMeasurement, Write_LineProtocol_Partial)
         raise ValueError(str(e)) from None
     if mult != 1:
-        parsed = parsed.withColumn(
-            "time_ns", F.col("time_ns") * F.lit(mult)
+        parsed = parsed.set_column(
+            parsed.schema.get_field_index("time_ns"), "time_ns",
+            pc.multiply_checked(parsed["time_ns"], mult),
         )
-    measurements = dict.fromkeys(
-        r["measurement"] for r in parsed.select("measurement").collect()
-    )
     written = {}
-    for m in measurements:
+    for m in dict.fromkeys(parsed["measurement"].to_pylist()):
         # a ?rp= write lands in that retention policy's OWN copy of
         # the measurement (dir `<rp>.<m>`) — rp-qualified FROM
         # sources resolve to it, DROP MEASUREMENT <rp>.<m> removes
@@ -605,13 +602,11 @@ def handle_write(
         known = storage.read_schema(f"{data_root}/{dirname}").get(
             "field_types", {}
         )
-        wide = to_measurement_table(parsed, m, field_types=known)
-        # the write response's row count rides the write job itself as
-        # an Observation metric instead of a second count() job that
-        # re-executes the pivot aggregation
-        wide, obs = _observed_count(wide)
-        storage.write_measurement(wide, f"{data_root}/{dirname}")
-        written[m] = int(obs.get["n"])
+        wide, tags = to_measurement_table(parsed, m, field_types=known)
+        df = spark.createDataFrame(wide)
+        df._og_tag_cols = tags
+        storage.write_measurement(df, f"{data_root}/{dirname}")
+        written[m] = wide.num_rows
     if ddl is not None and getattr(ddl.meta, "subscriptions", None):
         # subscriber fan-out AFTER the local write lands (the reference
         # forwards the raw points of every accepted write request)

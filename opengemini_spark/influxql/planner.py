@@ -3358,6 +3358,18 @@ class Planner:
         return out
 
     def _plan_agg(self, stmt: ast.SelectStatement, df: DataFrame) -> DataFrame:
+        """The filled aggregate with SLIMIT and LIMIT/OFFSET applied.
+
+        It is ordered by (time, tags) only where that order is read: by
+        the statement's own SLIMIT/LIMIT/OFFSET, and by an ``ORDER BY
+        <column>`` response, which emits the plan's rows as they come
+        (``presorted``). Every other reader orders the rows itself: the
+        response's final sort (``shape._final_order``), a join's sort, a
+        union leg's row numbering, ``distinct``'s own sort, a transform's
+        window, and an INTO write, which re-clusters rows by day. A global
+        sort left under them costs a range-bounds sampling job and a range
+        exchange, and Catalyst does not always remove it (see
+        ``_final_order``)."""
         out = self._agg_series(stmt, df)
         order_cols = []
         if stmt.group_time is not None:
@@ -3366,7 +3378,10 @@ class Planner:
             )
         if stmt.group_tags:
             order_cols += [F.col(t).asc() for t in stmt.group_tags]
-        if order_cols:
+        if order_cols and (
+            stmt.slimit or stmt.limit or stmt.offset
+            or getattr(stmt, "order_by_col", None)
+        ):
             out = out.orderBy(*order_cols)
         if stmt.slimit and stmt.group_tags:
             series = (

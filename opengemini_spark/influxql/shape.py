@@ -75,8 +75,12 @@ def _final_order(df: DataFrame, sort_exprs: list[Column]) -> DataFrame:
     A global ``orderBy`` plans a range exchange, whose bounds Spark samples
     in a job of its own before the map stage runs. The response holds
     every row and is collected whole, so one sorted partition serves as
-    well; Catalyst also drops a global sort the planner put under it
-    through projections and filters.
+    well. Catalyst's ``EliminateSorts`` does not reliably drop a global
+    sort the planner left below: when a sort key here is a literal (the
+    ``time`` of a tags-only GROUP BY), the rule strips that key and does
+    not revisit the child, so the planner's sort survives with its
+    sampling job. The planner therefore leaves out sorts that this one
+    redoes (``Planner._plan_agg``).
 
     The rule: ``coalesce(1)`` when the last stage reads only exchanges,
     ``repartition(1)`` when it scans a source. An exchange below the last

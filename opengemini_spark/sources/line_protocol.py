@@ -1,4 +1,4 @@
-"""InfluxDB line-protocol parser as a Spark source.
+"""InfluxDB line-protocol parser and per-measurement pivot.
 
 Format (reference parser ``lib/util/lifted/vm/protoparser/influx/parser.go``):
 
@@ -9,11 +9,11 @@ Field values: float (``1.5``), integer (``5i``), unsigned (``5u``), string
 
 Each request-sized batch is parsed once, on the driver (the reference
 parses a ``/write`` body in ``ts-sql`` before it routes rows,
-handler.go:1488), into a normalized long format ``(measurement, tags map,
-field name, field value typed, time_ns)`` handed to Spark as a local
-relation. Batch ingestion then pivots fields per measurement into the
-catalog's wide table; escape handling covers the ``\\,`` ``\\ `` ``\\=``
-cases.
+handler.go:1488), into a normalized long Arrow table ``(measurement, tags
+map, field name, field value typed, time_ns)``. Batch ingestion then
+pivots fields per measurement into the catalog's wide table, also on the
+driver, and hands Spark one local relation per measurement; escape
+handling covers the ``\\,`` ``\\ `` ``\\=`` cases.
 """
 
 from __future__ import annotations
@@ -21,40 +21,27 @@ from __future__ import annotations
 import re
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
+import pyarrow.compute as pc
 
-LP_SCHEMA = StructType(
-    [
-        StructField("measurement", StringType()),
-        StructField("tags", MapType(StringType(), StringType())),
-        StructField("field", StringType()),
-        StructField("f_float", DoubleType()),
-        StructField("f_int", LongType()),
-        StructField("f_str", StringType()),
-        StructField("f_bool", BooleanType()),
-        StructField("time_ns", LongType()),
-        # ordinal of the source line within the write batch: duplicate
-        # (series, time, field) values resolve to the LAST line, matching
-        # the reference's point-merge (the newest point wins)
-        StructField("line_no", LongType()),
-        # tag-array point identity: rows expanded from tk=[v1,v2,…] keep
-        # the ORIGINAL array key so they never merge with plain-tag points
-        # of the same expanded series (TestServer_TagArray count=11 — the
-        # array form is the stored series; expansion is logical)
-        StructField("akey", StringType()),
-    ]
-)
-_LP_ARROW_SCHEMA = to_arrow_schema(LP_SCHEMA)
+LP_SCHEMA = pa.schema([
+    ("measurement", pa.string()),
+    ("tags", pa.map_(pa.string(), pa.string())),
+    ("field", pa.string()),
+    ("f_float", pa.float64()),
+    ("f_int", pa.int64()),
+    ("f_str", pa.string()),
+    ("f_bool", pa.bool_()),
+    ("time_ns", pa.int64()),
+    # ordinal of the source line within the write batch: duplicate
+    # (series, time, field) values resolve to the LAST line, matching
+    # the reference's point-merge (the newest point wins)
+    ("line_no", pa.int64()),
+    # tag-array point identity: rows expanded from tk=[v1,v2,…] keep
+    # the ORIGINAL array key so they never merge with plain-tag points
+    # of the same expanded series (TestServer_TagArray count=11 — the
+    # array form is the stored series; expansion is logical)
+    ("akey", pa.string()),
+])
 
 _UNESCAPED_SPLIT = {
     ",": re.compile(r"(?<!\\),"),
@@ -279,10 +266,10 @@ def parse_line(line: str, default_time_ns: int = 0) -> list[dict]:
 
 
 def parse_line_protocol(
-    spark, lines: list[str], default_time_ns: int = 0,
-) -> DataFrame:
-    """Parse an in-memory batch of lines on the driver into ``LP_SCHEMA``
-    rows, handed to Spark as one Arrow local relation: no Spark job and no
+    lines: list[str], default_time_ns: int = 0,
+) -> pa.Table:
+    """Parse an in-memory batch of lines on the driver into one long
+    ``LP_SCHEMA`` Arrow table, one row per field value: no Spark job and no
     Python worker. ``line_no`` is the line's index in ``lines``.
 
     A bad point (duplicate tag, intra-line type conflict) is dropped and
@@ -307,117 +294,118 @@ def parse_line_protocol(
             row["line_no"] = no
             out.append(row)
     # an Arrow table, not pandas: a pandas int column holding None turns
-    # float64 and loses int64 precision; the table is a LocalRelation
-    # whatever the session's Arrow setting, empty batches included
-    return spark.createDataFrame(
-        pa.Table.from_pylist(out, schema=_LP_ARROW_SCHEMA), LP_SCHEMA
-    )
+    # float64 and loses int64 precision
+    return pa.Table.from_pylist(out, schema=LP_SCHEMA)
+
+
+# value class of a field occurrence: the one typed column it fills, in the
+# order the parser tries them; its Arrow type in the wide table; the class
+# of a field type registered in the measurement sidecar (Spark simpleString)
+_VALUE_COLS = ("f_str", "f_bool", "f_int", "f_float")
+_ARROW_TYPES = {
+    "f_str": pa.string(), "f_bool": pa.bool_(), "f_int": pa.int64(),
+    "f_float": pa.float64(),
+}
+_REGISTERED = {
+    "string": "f_str", "boolean": "f_bool", "bigint": "f_int",
+    "double": "f_float",
+}
 
 
 def to_measurement_table(
-    parsed: DataFrame, measurement: str,
+    parsed: pa.Table, measurement: str,
     field_types: dict[str, str] | None = None,
-) -> DataFrame:
-    """Pivot normalized rows into the wide per-measurement table
-    (schema-on-write: one TYPED column per field, tags as string columns).
+) -> tuple[pa.Table, list[str]]:
+    """Pivot one measurement's rows of a parsed batch into its wide table
+    (schema-on-write: one TYPED column per field, tags as string columns),
+    on the driver. Returns ``(table, tag keys)``.
+
+    Columns: ``time_ns``, the sorted union of the rows' tag keys, the
+    fields by name, ``__ln`` and ``__akey``. One row per point: (time,
+    tag set, tag-array key).
 
     Field types follow the line-protocol value class (handler.go:1488 →
     models.Point field types): float stays double, int stays int64, string
-    and boolean keep their own columns — not silently dropped. The
-    (field → type, tag keys) schema comes from plain Python over the
-    measurement's rows: on the posted batch's local relation that collect
-    runs no Spark job — the schema-on-write metadata lookup, not a data
-    scan.
+    and boolean keep their own columns — not silently dropped.
 
     A field's type is decided by its FIRST point (or the already-registered
     ``field_types`` from the measurement sidecar, Spark simpleString form);
-    a point carrying a CONFLICTING value class for any field is dropped
-    whole — the reference's partial write
+    a field occurrence of a CONFLICTING value class (an int beside a float
+    too) is dropped — the reference's partial write
     (TestServer_Write_FieldTypeConflict: int64 `value` rejects the float
     point but keeps the rest of the batch).
     """
-    m = parsed.filter(F.col("measurement") == measurement)
-    cls_expr = (
-        F.when(F.col("f_str").isNotNull(), "str")
-        .when(F.col("f_bool").isNotNull(), "bool")
-        .when(F.col("f_int").isNotNull(), "int")
-        .when(F.col("f_float").isNotNull(), "float")
-    )
-    m = m.withColumn("__cls", cls_expr)
+    m = parsed.filter(pc.equal(parsed["measurement"], measurement))
+    cols = m.to_pydict()
+    classes = [
+        next(c for c in _VALUE_COLS if cols[c][i] is not None)
+        for i in range(m.num_rows)
+    ]
     # per-field first-point (line_no, class) + the union of tag keys
     first: dict[str, tuple[int, str]] = {}
     tag_set: set[str] = set()
-    for field, cls, no, ks in m.select(
-        "field", "__cls", "line_no", F.map_keys("tags")
-    ).collect():
-        tag_set.update(ks)
+    for field, cls, no, tags in zip(
+        cols["field"], classes, cols["line_no"], cols["tags"]
+    ):
+        tag_set.update(k for k, _ in tags)
         if field not in first or no < first[field][0]:
             first[field] = (no, cls)
-    tag_keys = sorted(tag_set)
-    _SPARK_CLS = {
-        "bigint": "int", "double": "float", "string": "str",
-        "boolean": "bool",
-    }
+    registered = field_types or {}
     decided = {
-        f: _SPARK_CLS.get((field_types or {}).get(f, ""), cls)
+        f: _REGISTERED.get(registered.get(f, ""), cls)
         for f, (_, cls) in sorted(first.items())
     }
-    # drop conflicting FIELD occurrences (the point survives if any of
-    # its other fields are clean — Write_MultiField_FieldTypeConflict
-    # keeps collectTime/cpu/… when cmd=0i conflicts; a point whose only
-    # field conflicts vanishes entirely, Write_FieldTypeConflict)
-    conds = None
-    for name, cls in decided.items():
-        c = (F.col("field") == name) & (F.col("__cls") != cls)
-        conds = c if conds is None else (conds | c)
-    if conds is not None:
-        m = m.filter(~conds)
-
-    def _field_expr(name: str, cls: str) -> F.Column:
-        if cls == "str":
-            src = F.col("f_str")
-        elif cls == "bool":
-            src = F.col("f_bool")
-        elif cls == "float":
-            src = F.coalesce(F.col("f_float"), F.col("f_int").cast("double"))
-        else:
-            src = F.col("f_int")
-        # LAST matching line wins (point merge: the newest duplicate
-        # within a batch replaces earlier ones — server_test.go Join_Table
-        # writes table2,tk=c twice at one instant and reads the second)
-        cond = F.col("field") == name
-        return F.max_by(
-            F.when(cond, src),
-            F.when(cond & src.isNotNull(), F.col("line_no")),
-        ).alias(name)
-
-    field_exprs = [_field_expr(n, c) for n, c in decided.items()]
-    # tag-array rows group by their ORIGINAL array key as well: a point
-    # expanded from tk=[…,tv9,…] must not merge with a plain tk=tv9 point
-    # at the same instant (TestServer_TagArray — the array form is the
-    # stored series identity; expansion is logical)
-    wide = m.groupBy("time_ns", "tags", "akey").agg(
-        *field_exprs,
+    # point -> [first-written line, tags, {field: (line, value)}]
+    points: dict[tuple, list] = {}
+    for i, (field, cls, no) in enumerate(
+        zip(cols["field"], classes, cols["line_no"])
+    ):
+        if cls != decided[field]:
+            # drop the conflicting FIELD occurrence (the point survives if
+            # any of its other fields are clean —
+            # Write_MultiField_FieldTypeConflict keeps collectTime/cpu/…
+            # when cmd=0i conflicts; a point whose only field conflicts
+            # vanishes entirely, Write_FieldTypeConflict)
+            continue
+        tags = cols["tags"][i]
+        # tag-array rows key by their ORIGINAL array key as well: a point
+        # expanded from tk=[…,tv9,…] must not merge with a plain tk=tv9
+        # point at the same instant (TestServer_TagArray — the array form
+        # is the stored series identity; expansion is logical)
+        key = (cols["time_ns"][i], tuple(sorted(tags)), cols["akey"][i])
+        p = points.get(key)
+        if p is None:
+            p = points[key] = [no, dict(tags), {}]
         # first-written line per point: merged-stream operators resolve
         # duplicate TIMESTAMPS across different series to the first write
         # (server_test.go difference_derivative_time_duplicate); storage
         # rebases this onto the batch sequence stamp
-        F.min("line_no").alias("__ln"),
-    )
-    out = wide.select(
-        "time_ns",
-        *[F.col("tags").getItem(k).alias(k) for k in tag_keys],
-        # backtick: field names may contain '.' (not a struct path)
+        p[0] = min(p[0], no)
+        # LAST matching line wins (point merge: the newest duplicate
+        # within a batch replaces earlier ones — server_test.go Join_Table
+        # writes table2,tk=c twice at one instant and reads the second)
+        prev = p[2].get(field)
+        if prev is None or no > prev[0]:
+            p[2][field] = (no, cols[cls][i])
+    tag_keys = sorted(tag_set)
+    names = ["time_ns", *tag_keys, *decided, "__ln", "__akey"]
+    arrays = [
+        pa.array([k[0] for k in points], pa.int64()),
         *[
-            F.col(f"`{c}`")
-            for c in wide.columns
-            if c not in ("time_ns", "tags", "__ln", "akey")
+            pa.array([p[1].get(t) for p in points.values()], pa.string())
+            for t in tag_keys
         ],
-        "__ln",
-        F.col("akey").alias("__akey"),
-    )
+        *[
+            pa.array(
+                [p[2].get(f, (0, None))[1] for p in points.values()],
+                _ARROW_TYPES[cls],
+            )
+            for f, cls in decided.items()
+        ],
+        pa.array([p[0] for p in points.values()], pa.int64()),
+        pa.array([k[2] for k in points], pa.string()),
+    ]
     # tag/field distinction survives the pivot (the reference's CleanSchema,
     # meta/measurement.go:244); storage persists it as a sidecar so query
     # paths can tell a string FIELD from a tag (wildcard expansion needs it)
-    out._og_tag_cols = tag_keys
-    return out
+    return pa.Table.from_arrays(arrays, names=names), tag_keys

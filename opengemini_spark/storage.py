@@ -4,6 +4,14 @@ This module is the only one that knows the on-disk format: one parquet
 directory per UTC day, the ``_og_schema.json`` sidecar, and the single
 write policy every append, rollup and DELETE rewrite goes through.
 
+The sidecar holds the tag keys, the registered field types and the
+table's column schema (``columns``: every column any write put in the
+files, plus ``p_day``). ``write_measurement`` keeps it on every append
+and ``rewrite_measurement`` carries it over, so a read takes its schema
+from the sidecar instead of merging every file footer in a Spark job of
+its own. Only a directory those writers did not create (plain parquet,
+or a sidecar without ``columns``) is read with ``mergeSchema``.
+
 Reference mapping (SURVEY.md §1.1, §3.2):
 
 - shard group (time-ranged, ``meta/shardinfo.go:33``) → parquet partition
@@ -32,7 +40,10 @@ import shutil
 import time
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    Column, DataFrame, DataFrameReader, SparkSession, functions as F,
+)
+from pyspark.sql.types import DateType, StructType
 
 DAY_NS = 86_400_000_000_000
 PARTITION_COL = "p_day"
@@ -56,9 +67,44 @@ SCHEMA_META = "_og_schema.json"
 
 def read_schema(root: str) -> dict:
     """The measurement's ``_og_schema.json`` sidecar (``tags``,
-    ``field_types``), or ``{}`` when the table has none yet."""
+    ``field_types``, ``columns``), or ``{}`` when the table has none
+    yet."""
     meta_path = Path(root) / SCHEMA_META
     return json.loads(meta_path.read_text()) if meta_path.exists() else {}
+
+
+def _columns_after(prior: dict, root: str, batch: StructType) -> dict | None:
+    """The table's column schema once ``batch`` (carrying ``p_day``) is
+    appended, as the sidecar stores it: the known columns in order, the
+    batch's new ones after them, ``p_day`` last — what a ``mergeSchema``
+    read finds, up to column order.
+
+    ``None`` when it cannot be known without reading the files: the table
+    has files but its sidecar no column schema, or a column changes type,
+    which the files then hold in two types."""
+    if "columns" in prior:
+        known = StructType.fromJson(prior["columns"])
+    elif Path(root).exists():
+        return None
+    else:
+        known = StructType()
+    types = {f.name: f.dataType for f in known.fields}
+    cols = StructType([f for f in known.fields if f.name != PARTITION_COL])
+    for f in batch.fields:
+        if f.name not in types:
+            cols.add(f.name, f.dataType)
+        elif types[f.name] != f.dataType:
+            return None
+    return cols.add(PARTITION_COL, DateType()).jsonValue()
+
+
+def _reader(spark: SparkSession, meta: dict) -> DataFrameReader:
+    """A parquet reader for a table with sidecar ``meta``: its stored
+    column schema, else a ``mergeSchema`` read that unions the columns of
+    every file footer in a Spark job."""
+    if "columns" in meta:
+        return spark.read.schema(StructType.fromJson(meta["columns"]))
+    return spark.read.option("mergeSchema", "true")
 
 
 def _write_days(df: DataFrame, root: str, mode: str = "append") -> None:
@@ -89,9 +135,11 @@ def write_measurement(df: DataFrame, root: str) -> None:
     split across several write tasks and files.
 
     If the DataFrame carries tag metadata (``_og_tag_cols``, attached by
-    the line-protocol pivot), it is persisted as a sidecar — the
+    the line-protocol write), it is persisted as a sidecar — the
     CleanSchema analog (meta/measurement.go:244) that lets readers tell
-    tags from string fields.
+    tags from string fields. The sidecar also records the table's column
+    schema after this batch, which ``read_measurement`` reads with; a
+    table that had files before its sidecar had one keeps none.
 
     Each write batch is stamped with a monotonically increasing ``__seq``:
     a later write of the same (series, timestamp) REPLACES the whole row
@@ -132,8 +180,10 @@ def write_measurement(df: DataFrame, root: str) -> None:
             # longer to write than its line count in ns, so every point of
             # a later batch orders after every point of this one
             df = df.withColumn("__ln", F.lit(base) + F.col("__ln"))
-    _write_days(with_partition(df), root)
-    if tags is not None or known or prior:
+    df = with_partition(df)
+    columns = _columns_after(prior, root, df.schema)
+    _write_days(df, root)
+    if tags is not None or known or prior or columns:
         meta: dict = dict(prior)
         if tags is not None or "tags" in prior:
             # only materialize the tag sidecar when the writer knows its
@@ -143,16 +193,25 @@ def write_measurement(df: DataFrame, root: str) -> None:
                 set(prior.get("tags", [])) | set(tags or [])
             )
         meta["field_types"] = known
+        meta.pop("columns", None)
+        if columns is not None:
+            meta["columns"] = columns
         (Path(root) / SCHEMA_META).write_text(json.dumps(meta))
 
 
 def read_measurement(spark: SparkSession, root: str) -> DataFrame:
     """Read a measurement, resolving duplicate (series, timestamp) rows to
     the NEWEST write batch (``__seq`` dedup — the merge an LSM iterator
-    does across memtable/TSSP levels). ``mergeSchema`` unions field
-    columns across writes with evolving field sets."""
-    df = spark.read.option("mergeSchema", "true").parquet(root)
-    tags: list[str] | None = read_schema(root).get("tags")
+    does across memtable/TSSP levels).
+
+    The schema is the sidecar's column schema, the union of the field
+    columns of writes with evolving field sets, so building the frame
+    runs no Spark job. A table whose sidecar has none (not written by
+    ``write_measurement``) is read with ``mergeSchema``, which unions them
+    in a job of its own."""
+    meta = read_schema(root)
+    df = _reader(spark, meta).parquet(root)
+    tags: list[str] | None = meta.get("tags")
     if SEQ_COL in df.columns:
         from pyspark.sql import Window
 
@@ -232,11 +291,12 @@ def rewrite_measurement(spark: SparkSession, root: str, keep: Column) -> None:
 
     The kept rows go through the same day layout as appends (rebalance,
     zstd) into a sibling directory that then replaces the table; the
-    sidecar carries over. When no row survives the measurement directory
-    is removed, as an empty parquet directory is unreadable."""
+    sidecar carries over, its column schema too: the rewritten files hold
+    every column of the read. When no row survives the measurement
+    directory is removed, as an empty parquet directory is unreadable."""
     saved = read_schema(root)
     tmp = root + ".rewrite"
-    kept = spark.read.option("mergeSchema", "true").parquet(root).filter(keep)
+    kept = _reader(spark, saved).parquet(root).filter(keep)
     _write_days(kept, tmp, mode="overwrite")
     shutil.rmtree(root)
     if not any(Path(tmp).rglob("*.parquet")):

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -23,3 +24,38 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)``: ``fn()``'s result and the ids of every Spark job
+    it ran. ``fn`` runs under a fresh job group, between two marker jobs
+    of that group; the ids are the span between them, so the jobs a query
+    runs under its own group count too."""
+    sc = spark.sparkContext
+    props = (
+        "spark.jobGroup.id", "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+
+    def marker(group: str) -> int:
+        spark.range(1).collect()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run(fn):
+        saved = [sc.getLocalProperty(k) for k in props]
+        group = f"test-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "")
+        try:
+            first = marker(group)
+            out = fn()
+            assert sc.getLocalProperty("spark.jobGroup.id") == group, (
+                "fn left its thread in another job group"
+            )
+            last = marker(group)
+        finally:
+            for k, v in zip(props, saved):
+                sc.setLocalProperty(k, v)
+        return out, list(range(first + 1, last))
+
+    return run

@@ -19,14 +19,6 @@ PKG = Path(__file__).resolve().parent.parent / "opengemini_spark"
 
 # (relative path, enclosing function) -> why the collect is bounded.
 ALLOWLIST = {
-    ("api.py", "handle_write"):
-        "one row per parsed field value of the posted batch, which is a "
-        "local relation built on the driver — bounded by the batch the "
-        "client sent, not by stored data",
-    ("sources/line_protocol.py", "to_measurement_table"):
-        "one row per parsed field value of the posted batch, which is a "
-        "local relation built on the driver — bounded by the batch the "
-        "client sent, not by stored data",
     ("influxql/planner.py", "plan_show"):
         "SHOW SERIES CARDINALITY: one row per 1-week shard group — "
         "bounded by the data's time span, not its volume",

@@ -748,7 +748,7 @@ def test_audio_fingerprint_banded_matches_brute_force(spark):
     assert len(short) == 1 and short[0]["afp"] >= 0
 
 
-def test_media_near_dups_decode_once_lazily(spark):
+def test_media_near_dups_decode_once_lazily(spark, spark_jobs):
     """Building the dHash / audio near-dup frames runs no Spark job, and
     the executed plan decodes the media in exactly one MapInPandas."""
     cases = [
@@ -759,12 +759,11 @@ def test_media_near_dups_decode_once_lazily(spark):
          multimodal.synth_wav(spark.createDataFrame(
              [(i,) for i in range(0, 200, 5)], "doc_id long"))),
     ]
-    tracker = spark.sparkContext.statusTracker()
     for near_dups, media in cases:
-        before = len(tracker.getJobIdsForGroup(None) or [])
-        df = near_dups(media, max_hamming=2)
-        after = len(tracker.getJobIdsForGroup(None) or [])
-        assert after == before, f"{near_dups.__name__} ran jobs at build"
+        df, jobs = spark_jobs(
+            lambda nd=near_dups, m=media: nd(m, max_hamming=2)
+        )
+        assert jobs == [], f"{near_dups.__name__} ran jobs at build"
         assert df.collect()
         # the AQE plan as executed (final stages, not the initial plan)
         plan = df._jdf.queryExecution().executedPlan().executedPlan()
@@ -1315,16 +1314,14 @@ def test_bpe_encode_frozen_local_merges_row_identical(spark, sf_dir):
     assert sorted(map(tuple, df.collect())) == oracle
 
 
-def test_bpe_merges_entry_runs_few_jobs(spark, sf_dir):
+def test_bpe_merges_entry_runs_few_jobs(spark, sf_dir, spark_jobs):
     """The registered text_bpe_merges entry trains with one vocabulary
     collect, not a Spark job chain per merge (>= 3 jobs x 16 merges)."""
     from opengemini_spark import suite
 
     fn = suite.queries()["text_bpe_merges"]
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    rows = fn(spark, sf_dir).collect()
-    jobs = len(tracker.getJobIdsForGroup(None) or []) - before
+    rows, ids = spark_jobs(lambda: fn(spark, sf_dir).collect())
+    jobs = len(ids)
     assert [r["step"] for r in rows] == list(range(1, len(rows) + 1))
     assert len(rows) == 16
     assert jobs < 10, jobs
@@ -1344,7 +1341,7 @@ def test_bpe_local_trainer_vocab_bound_raises(spark):
         bpe.bpe_train_local(docs, n_merges=2, max_vocab=3)
 
 
-def test_bpe_apply_merges_lazy_plan_no_jobs(spark):
+def test_bpe_apply_merges_lazy_plan_no_jobs(spark, spark_jobs):
     """The frozen-merge apply chain must not launch Spark jobs at plan
     time (the trainer's per-merge argmax probes were the 8.9 s bench
     cost); only the caller's action executes."""
@@ -1353,11 +1350,10 @@ def test_bpe_apply_merges_lazy_plan_no_jobs(spark):
     docs = spark.createDataFrame(
         [(1, "low low lower newest widest")], "doc_id long, text string"
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    df = bpe.bpe_apply_merges(docs, [("l", "o"), ("lo", "w"), ("e", "s")])
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "plan construction launched Spark jobs"
+    df, jobs = spark_jobs(
+        lambda: bpe.bpe_apply_merges(docs, [("l", "o"), ("lo", "w"), ("e", "s")])
+    )
+    assert jobs == [], "plan construction launched Spark jobs"
     out = {r["doc_id"]: r["bpe_text"] for r in df.collect()}
     assert out[1] == "low low low e r n e w es t w i d es t"
 

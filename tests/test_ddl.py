@@ -128,11 +128,16 @@ def test_admin_surface(ddl, spark):
 def test_show_and_kill_query_registry(ddl, spark):
     from opengemini_spark import querytrack
     qid = querytrack.attach(spark, "SELECT fake")
-    rows = ddl.execute("SHOW QUERIES")["series"][0]["values"]
-    assert any(r[0] == qid and r[1] == "SELECT fake" for r in rows)
-    assert ddl.execute(f"KILL QUERY {qid}") == {"ok": True}
-    rows2 = ddl.execute("SHOW QUERIES")["series"][0]["values"]
-    assert not any(r[0] == qid for r in rows2)
+    try:
+        rows = ddl.execute("SHOW QUERIES")["series"][0]["values"]
+        assert any(r[0] == qid and r[1] == "SELECT fake" for r in rows)
+        assert ddl.execute(f"KILL QUERY {qid}") == {"ok": True}
+        rows2 = ddl.execute("SHOW QUERIES")["series"][0]["values"]
+        assert not any(r[0] == qid for r in rows2)
+    finally:
+        # give the thread its job group back, or every later test's jobs
+        # run under ogq-<qid>
+        querytrack.detach(spark, qid)
 
 
 def test_show_grants(ddl, spark):

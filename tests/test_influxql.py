@@ -229,7 +229,7 @@ def test_nested_transform_derivative(spark, sf_dir):
         assert r["derivative"] == pytest.approx(expected)
 
 
-def test_nested_transform_plans_without_spark_jobs(spark, sf_dir):
+def test_nested_transform_plans_without_spark_jobs(spark, sf_dir, spark_jobs):
     """The inner aggregate of derivative(mean(...)) is planned with the
     statement's WHERE time range, so its fill spine's bounds are literals
     (an open range takes them from the data, as a subquery of the plan):
@@ -243,11 +243,8 @@ def test_nested_transform_plans_without_spark_jobs(spark, sf_dir):
         "GROUP BY time(1h), event_type"
     )
     load_table(spark, sf_dir, "events")
-    tracker = spark.sparkContext.statusTracker()
-    before = max(tracker.getJobIdsForGroup(None) or [], default=-1)
-    df = Planner(spark, sf_dir).plan(parse(q))
-    after = max(tracker.getJobIdsForGroup(None) or [], default=-1)
-    assert after == before, "planning launched Spark jobs"
+    df, jobs = spark_jobs(lambda: Planner(spark, sf_dir).plan(parse(q)))
+    assert jobs == [], "planning launched Spark jobs"
     rows = df.collect()
     assert rows
     assert all(

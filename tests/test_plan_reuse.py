@@ -9,11 +9,6 @@ import pyarrow.parquet as pq
 import pytest
 
 
-def _last_job(spark) -> int:
-    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []
-    return max(ids, default=-1)
-
-
 def test_codegen_cache_holds_a_working_set_larger_than_spark_default(spark):
     """~150 distinct plans, each with its own generated class, collected
     twice: the second pass compiles nothing. Spark's default cache of 100
@@ -30,7 +25,9 @@ def test_codegen_cache_holds_a_working_set_larger_than_spark_default(spark):
     assert cm.METRIC_COMPILATION_TIME().getCount() - before == 0
 
 
-def test_load_table_reuses_the_schema_of_an_unchanged_file(spark, tmp_path):
+def test_load_table_reuses_the_schema_of_an_unchanged_file(
+    spark, tmp_path, spark_jobs,
+):
     from pyspark.errors import AnalysisException
 
     from opengemini_spark.catalog import load_table
@@ -39,9 +36,8 @@ def test_load_table_reuses_the_schema_of_an_unchanged_file(spark, tmp_path):
     pq.write_table(pa.table({"a": [1, 2, 3]}), path)
     assert load_table(spark, str(tmp_path), "t").columns == ["a"]
 
-    before = _last_job(spark)
-    df = load_table(spark, str(tmp_path), "t")
-    assert _last_job(spark) == before, "load_table ran a Spark job"
+    df, jobs = spark_jobs(lambda: load_table(spark, str(tmp_path), "t"))
+    assert jobs == [], "load_table ran a Spark job"
     assert sorted(r.a for r in df.collect()) == [1, 2, 3]
 
     # a rewritten file is a new (mtime, size): its schema is read afresh

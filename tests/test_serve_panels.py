@@ -4,15 +4,15 @@ and the job group a query leaves its thread in.
 
 A Spark job costs a fixed 65-100 ms at these sizes, so a panel's job count
 is its cost. Jobs are counted as the span of job ids between two marker
-jobs run in the test's own job group: a query runs its jobs under a group
-of its own (``querytrack``), so only the id span sees all of them.
+jobs run in the test's own job group (the ``spark_jobs`` fixture): a
+query runs its jobs under a group of its own (``querytrack``), so only the
+id span sees all of them.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from opengemini_spark.api import handle_query, handle_write
 from opengemini_spark.catalog import load_table
@@ -96,24 +96,6 @@ def _marker(spark) -> int:
     return max(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _jobs(spark, fn):
-    """``fn()``'s result and the ids of every Spark job it ran, with the
-    test's own job group around it."""
-    sc = spark.sparkContext
-    group = f"test-serve-panels-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "")
-    try:
-        first = _marker(spark)
-        out = fn()
-        assert sc.getLocalProperty("spark.jobGroup.id") == group, (
-            "the query left its thread in another job group"
-        )
-        last = _marker(spark)
-    finally:
-        _clear_job_group(sc)
-    return out, list(range(first + 1, last))
-
-
 def test_query_restores_the_callers_job_group(spark, sf_dir):
     """A query runs its jobs under its own group, then gives the thread
     back the group it had: none, or the caller's own."""
@@ -141,7 +123,7 @@ def test_query_restores_the_callers_job_group(spark, sf_dir):
         _clear_job_group(sc)
 
 
-def test_panel_statements_run_in_few_jobs(spark, sf_dir):
+def test_panel_statements_run_in_few_jobs(spark, sf_dir, spark_jobs):
     """Every statement shuffles its (bucket, tag-set) aggregate at most
     once more, by series, for fill, transform and recurrence, and sorts its
     response in one partition with no sampling job: at most 4 jobs, and 5
@@ -149,7 +131,7 @@ def test_panel_statements_run_in_few_jobs(spark, sf_dir):
     load_table(spark, sf_dir, "events")
     counts = {}
     for name, q in PANELS.items():
-        body, ids = _jobs(spark, lambda q=q: handle_query(spark, sf_dir, q))
+        body, ids = spark_jobs(lambda q=q: handle_query(spark, sf_dir, q))
         res = body["results"][0]
         assert "error" not in res, (name, res)
         assert res.get("series"), name
@@ -172,7 +154,9 @@ def test_panel_bodies_are_exact(spark, sf_dir):
         assert handle_query(spark, sf_dir, q) == expected[name], name
 
 
-def test_raw_read_over_day_files_keeps_its_scan_tasks(spark, sf_dir, tmp_path):
+def test_raw_read_over_day_files_keeps_its_scan_tasks(
+    spark, sf_dir, tmp_path, spark_jobs,
+):
     """A raw read has no shuffle for the final sort to ride on: its rows
     meet in one partition through an exchange, so the scan of the three
     day files still runs as several tasks."""
@@ -189,8 +173,8 @@ def test_raw_read_over_day_files_keeps_its_scan_tasks(spark, sf_dir, tmp_path):
     ]
     assert len(files) == 3
 
-    body, ids = _jobs(
-        spark, lambda: handle_query(spark, sf_dir, "SELECT v FROM m", data_root=root)
+    body, ids = spark_jobs(
+        lambda: handle_query(spark, sf_dir, "SELECT v FROM m", data_root=root)
     )
     rows = body["results"][0]["series"][0]["values"]
     assert [r[0] for r in rows] == sorted(

@@ -3,8 +3,6 @@ measurement pivot, Arrow ingestion, and the Spark-job cost of a write."""
 
 from __future__ import annotations
 
-import uuid
-
 import pyarrow as pa
 import pytest
 
@@ -49,74 +47,105 @@ def test_parse_line_errors():
     assert not isinstance(e.value, InvalidFieldValueError)
 
 
-def test_parse_df_and_pivot(spark):
-    parsed = parse_line_protocol(spark, LINES)
-    assert parsed.count() == 7  # 2 + 1 + 3 + 1 field rows
-    cpu = to_measurement_table(parsed, "cpu")
-    rows = {r["host"]: r for r in cpu.collect()}
+def test_parse_df_and_pivot():
+    parsed = parse_line_protocol(LINES)
+    assert parsed.num_rows == 7  # 2 + 1 + 3 + 1 field rows
+    cpu, tags = to_measurement_table(parsed, "cpu")
+    assert tags == ["host", "region"]
+    rows = {r["host"]: r for r in cpu.to_pylist()}
     assert rows["h1"]["usage"] == 0.5
     assert rows["h1"]["idle"] == 99.0
     assert rows["h2"]["usage"] == 0.75
     assert rows["h2"]["idle"] is None  # schema-on-write union of fields
     # __ln: hidden first-written-line ordinal (merged-stream duplicate-
     # timestamp resolution, difference_derivative_time_duplicate)
-    assert set(cpu.columns) == {
+    assert set(cpu.column_names) == {
         "time_ns", "host", "region", "usage", "idle", "__ln", "__akey"
     }
 
 
-def _spark_jobs(spark, fn):
-    """``fn()``'s result and the Spark jobs it submitted, counted under a
-    job group of its own (a query leaves its thread in group "")."""
-    sc = spark.sparkContext
-    group = f"test-sources-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, sc.statusTracker().getJobIdsForGroup(group)
+def test_pivot_merges_points_and_drops_conflicting_fields():
+    """One row per (time, tag set, tag-array key): the last line wins per
+    field, ``__ln`` is the point's first line, and a field occurrence of
+    another value class than the field's first point (or its registered
+    type) is dropped, the rest of its point kept."""
+    lines = [
+        "m,h=a,r=x v=1,w=1i 10",
+        "m,r=x,h=a v=2 10",          # same point, tags in another order
+        "m,h=a v=3i,s=\"s\" 20",    # int beside a float field: v dropped
+        "m,h=a v=4i 30",             # the point's only field conflicts
+        "m,h=a,k=[p,q] v=5 10",      # tag array: own points at time 10
+    ]
+    wide, tags = to_measurement_table(parse_line_protocol(lines), "m")
+    assert tags == ["h", "k", "r"]
+    assert wide.column_names == [
+        "time_ns", "h", "k", "r", "s", "v", "w", "__ln", "__akey"
+    ]
+    got = sorted(wide.to_pylist(), key=lambda r: (r["time_ns"], str(r["k"])))
+    assert got == [
+        {"time_ns": 10, "h": "a", "k": None, "r": "x", "s": None, "v": 2.0,
+         "w": 1, "__ln": 0, "__akey": None},
+        {"time_ns": 10, "h": "a", "k": "p", "r": None, "s": None, "v": 5.0,
+         "w": None, "__ln": 4, "__akey": "m,h=a,k=[p,q]"},
+        {"time_ns": 10, "h": "a", "k": "q", "r": None, "s": None, "v": 5.0,
+         "w": None, "__ln": 4, "__akey": "m,h=a,k=[p,q]"},
+        {"time_ns": 20, "h": "a", "k": None, "r": None, "s": "s", "v": None,
+         "w": None, "__ln": 2, "__akey": None},
+    ]
+    # a registered type decides over the batch's first point
+    wide, _ = to_measurement_table(
+        parse_line_protocol(lines), "m", field_types={"v": "bigint"}
+    )
+    assert wide.schema.field("v").type == pa.int64()
+    assert sorted(
+        (r["time_ns"], r["v"]) for r in wide.to_pylist() if r["v"] is not None
+    ) == [(20, 3), (30, 4)]
 
 
-def test_parse_is_a_local_relation_without_spark_jobs(spark):
-    """The batch is parsed on the driver: building the DataFrame, and the
-    pivot's schema collect over it, submit no Spark job (no Python-worker
-    parse), and the optimized plan is a LocalRelation."""
-    parsed, jobs = _spark_jobs(spark, lambda: parse_line_protocol(spark, LINES))
+def test_parse_is_a_local_relation_without_spark_jobs(spark, spark_jobs):
+    """The batch is parsed and pivoted on the driver: neither submits a
+    Spark job (no Python-worker parse, no schema collect), and a
+    measurement reaches Spark as a LocalRelation."""
+    parsed, jobs = spark_jobs(lambda: parse_line_protocol(LINES))
     assert jobs == []
-    plan = parsed._jdf.queryExecution().optimizedPlan()
+    (cpu, _), jobs = spark_jobs(lambda: to_measurement_table(parsed, "cpu"))
+    assert jobs == []
+    df, jobs = spark_jobs(lambda: spark.createDataFrame(cpu))
+    assert jobs == []
+    plan = df._jdf.queryExecution().optimizedPlan()
     assert plan.getClass().getSimpleName() == "LocalRelation"
-    _, jobs = _spark_jobs(spark, lambda: to_measurement_table(parsed, "cpu"))
-    assert jobs == []
     # line_no is the line's index in the batch
-    assert sorted({r["line_no"] for r in parsed.collect()}) == [0, 1, 2, 3]
+    assert sorted(set(parsed["line_no"].to_pylist())) == [0, 1, 2, 3]
 
 
-def test_parse_keeps_int64_precision(spark):
+def test_parse_keeps_int64_precision():
     """An int field beside a point without it keeps all 64 bits (a float
     detour would round 2**63 - 1)."""
-    parsed = parse_line_protocol(
-        spark, ["m v=9223372036854775807i 1", "m w=1 2"]
-    )
-    assert [r["f_int"] for r in parsed.orderBy("time_ns").collect()] == [
+    parsed = parse_line_protocol(["m v=9223372036854775807i 1", "m w=1 2"])
+    assert parsed.sort_by("time_ns")["f_int"].to_pylist() == [
+        9223372036854775807, None,
+    ]
+    wide, _ = to_measurement_table(parsed, "m")
+    assert wide.sort_by("time_ns")["v"].to_pylist() == [
         9223372036854775807, None,
     ]
 
 
-def test_write_of_two_measurements_takes_at_most_six_jobs(spark, tmp_path):
-    """A request-sized write runs only the per-measurement writes: no
-    worker parse, no cached batch, no discovery or schema job."""
+def test_write_of_two_measurements_takes_at_most_four_jobs(
+    spark, spark_jobs, tmp_path,
+):
+    """A request-sized write runs only the per-measurement writes, two
+    jobs each (the day rebalance and the file write): no worker parse, no
+    pivot aggregate, no discovery, schema or count job."""
     from opengemini_spark.api import handle_write
 
     lines = [
         f"{m},host=h{i % 3} v={i},n={i}i {1700000000000000000 + i}"
         for i in range(40) for m in ("cpu", "mem")
     ]
-    got, jobs = _spark_jobs(
-        spark, lambda: handle_write(spark, lines, str(tmp_path))
-    )
+    got, jobs = spark_jobs(lambda: handle_write(spark, lines, str(tmp_path)))
     assert got == {"written": {"cpu": 40, "mem": 40}}
-    assert len(jobs) <= 6, f"write submitted {len(jobs)} Spark jobs"
+    assert len(jobs) <= 4, f"write submitted {len(jobs)} Spark jobs"
 
 
 def test_arrow_ingest(spark):
@@ -136,13 +165,12 @@ def test_arrow_ingest(spark):
 def test_pivot_preserves_string_bool_int_field_types(spark):
     """String/boolean/int field values survive the pivot with their own
     typed columns (ADVICE r1: they were silently nulled before)."""
-    parsed = parse_line_protocol(spark, LINES)
-    disk = to_measurement_table(parsed, "disk")
-    row = disk.collect()[0]
+    disk, _ = to_measurement_table(parse_line_protocol(LINES), "disk")
+    row = disk.to_pylist()[0]
     assert row["free"] == 12
     assert row["label"] == "root vol"
     assert row["ok"] is True
-    dt = dict(disk.dtypes)
+    dt = dict(spark.createDataFrame(disk).dtypes)
     assert dt["free"] == "bigint"
     assert dt["label"] == "string"
     assert dt["ok"] == "boolean"
