@@ -16,7 +16,7 @@ from __future__ import annotations
 import json
 
 import pyarrow.compute as pc
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from opengemini_spark import storage
 from opengemini_spark.influxql import parse, to_influx_json
@@ -312,7 +312,12 @@ def handle_query(
                 cols = [c for c in df.columns if c != "__m"]
                 blocks: list[dict] = []
                 cur = None
-                for r in df.orderBy("__m", *cols).collect():
+                # a local relation of the planner's collected rows: sort
+                # it here, nulls first like Spark's ascending order
+                rows = sorted(df.collect(), key=lambda r: [
+                    (r[c] is not None, r[c]) for c in ("__m", *cols)
+                ])
+                for r in rows:
                     if cur is None or cur["name"] != r["__m"]:
                         cur = {
                             "name": r["__m"], "columns": cols, "values": [],
@@ -656,10 +661,29 @@ def handle_query_chunked(
     return docs
 
 
-def _prom_result_name(node) -> str:
-    from opengemini_spark.promql.engine import result_metric_name
+def _prom_rows(df: DataFrame) -> list[dict]:
+    """A PromQL result's (labels…, t µs, value) rows on the driver. The
+    response body holds every row, so one ``collect`` is the cheapest way
+    there; the shapers order the rows in Python."""
+    return [r.asDict() for r in df.collect()]
 
-    return result_metric_name(node)
+
+def _prom_body(rows: list[dict], node, kind: str = "matrix",
+               order: str | None = None) -> dict:
+    """The matrix or vector body of a PromQL result: every column but
+    ``t`` and ``value`` is a label, and the series carry the name the
+    expression's result keeps (``result_metric_name``)."""
+    from opengemini_spark.promql.engine import result_metric_name
+    from opengemini_spark.promql.shape import (
+        rows_to_prom_matrix,
+        to_prom_vector,
+    )
+
+    labels = [k for k in (rows[0] if rows else ()) if k not in ("t", "value")]
+    metric = result_metric_name(node)
+    if kind == "matrix":
+        return rows_to_prom_matrix(rows, metric, labels)
+    return to_prom_vector(rows, metric, labels, order=order)
 
 
 def handle_prom_query_range(
@@ -673,23 +697,21 @@ def handle_prom_query_range(
     lookback_s: int | None = None,
 ) -> dict:
     """``GET /api/v1/query_range`` (handler_prom.go:539): PromQL text →
-    engine → matrix JSON; errors in the Prometheus envelope.
-    ``lookback_s`` mirrors the ``lookback-delta`` url parameter."""
+    engine → result rows collected once → matrix JSON shaped on the
+    driver; errors in the Prometheus envelope. ``lookback_s`` mirrors the
+    ``lookback-delta`` url parameter. The body equals
+    :func:`handle_prom_query_range_cached`'s for the same window."""
     from opengemini_spark.promql import query_range
     from opengemini_spark.promql.parser import parse_promql
-    from opengemini_spark.promql.shape import to_prom_matrix, to_prom_vector
 
     try:
         node = parse_promql(promql)
         kw = {} if lookback_s is None else {"lookback_s": lookback_s}
         df = query_range(spark, sf_dir, registry, promql, start_s, end_s,
                          step_s, **kw)
-        labels = [c for c in df.columns
-                  if c not in ("t", "value", "__ts")]
-        metric = _prom_result_name(node)
         # /query_range is ALWAYS a matrix, even for a one-point window
         # (prom_test.go `sum(up @ start())` with start == end)
-        return to_prom_matrix(df, metric, labels)
+        return _prom_body(_prom_rows(df), node)
     except (SyntaxError, ValueError, KeyError, AssertionError) as e:
         return {"status": "error", "errorType": "bad_data", "error": str(e)}
 
@@ -705,15 +727,12 @@ def handle_prom_query(
     """``GET /api/v1/query`` (handler.go:345-351 servePromQuery,
     handler_prom.go): instant evaluation at ``time_s``. The most-hit
     Prometheus endpoint — a thin shim over the engine's single-timestamp
-    evaluation (`promql/engine.py::query_instant`) + the vector/scalar/
-    matrix response shapes; errors in the Prometheus envelope."""
+    evaluation (`promql/engine.py::query_instant`); a vector or matrix
+    result is collected once and shaped on the driver, like
+    ``/query_range``'s. Errors in the Prometheus envelope."""
     from opengemini_spark.promql.engine import query_instant
     from opengemini_spark.promql.parser import parse_promql
-    from opengemini_spark.promql.shape import (
-        to_prom_matrix,
-        to_prom_scalar,
-        to_prom_vector,
-    )
+    from opengemini_spark.promql.shape import to_prom_scalar
 
     try:
         node = parse_promql(promql)
@@ -725,12 +744,7 @@ def handle_prom_query(
             return to_prom_scalar(payload, time_s)
         order = getattr(payload, "order", None)
         df = getattr(payload, "df", payload)
-        labels = [c for c in df.columns
-                  if c not in ("t", "value", "__ts")]
-        metric = _prom_result_name(node)
-        if kind == "matrix":
-            return to_prom_matrix(df, metric, labels)
-        return to_prom_vector(df, metric, labels, order=order)
+        return _prom_body(_prom_rows(df), node, kind, order)
     except (SyntaxError, ValueError, KeyError, AssertionError) as e:
         return {"status": "error", "errorType": "bad_data", "error": str(e)}
 
@@ -748,36 +762,33 @@ def handle_prom_query_range_cached(
 ) -> dict:
     """``GET /api/v1/query_range`` through the results cache
     (results_cache.go Do): the request window is partitioned into cached
-    extents + gaps, only the gaps hit the Spark engine, and the merged
-    grid is cached back (minus the freshness window). ``cache`` is a
+    extents + gaps, only the gaps hit the Spark engine (each gap's rows
+    collected once), and the merged grid is cached back (minus the
+    freshness window). The merged rows are shaped like
+    :func:`handle_prom_query_range`'s, so a cached and an uncached
+    request give the same body. ``cache`` is a
     :class:`opengemini_spark.promql.results_cache.ResultsCache`
     constructed with a µs ``now_ms`` clock (engine time is µs);
     ``cache_control='no-store'`` bypasses, like the reference."""
     from opengemini_spark.promql import query_range
     from opengemini_spark.promql.parser import parse_promql
-    from opengemini_spark.promql.shape import rows_to_prom_matrix
 
     try:
         node = parse_promql(promql)
-        metric = getattr(node, "metric", "")
         us = 1_000_000
 
         def eval_fn(s_us: int, e_us: int) -> list[dict]:
-            df = query_range(
+            return _prom_rows(query_range(
                 spark, sf_dir, registry, promql,
                 s_us // us, e_us // us, step_s,
-            )
-            return [r.asDict() for r in df.collect()]
+            ))
 
         key = cache.key(promql, step_s * us, start_s * us)
         rows = cache.do(
             key, start_s * us, end_s * us, step_s * us, eval_fn,
             cache_control,
         )
-        label_cols = sorted(
-            {k for r in rows for k in r} - {"t", "value"}
-        )
-        return rows_to_prom_matrix(rows, metric, label_cols)
+        return _prom_body(rows, node)
     except (SyntaxError, ValueError, KeyError, AssertionError) as e:
         return {"status": "error", "errorType": "bad_data", "error": str(e)}
 

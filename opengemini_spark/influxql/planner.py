@@ -4037,11 +4037,13 @@ class Planner:
                 keys = [stmt.key] if stmt.key in tags else []
             mrows: list[tuple] = []
             for k in keys:
-                vals = [
+                # sorted on the driver: the values are collected anyway,
+                # and a Spark sort adds a sampling job and a range exchange
+                vals = sorted(
                     r[0]
                     for r in d.select(k).where(F.col(k).isNotNull())
-                    .distinct().orderBy(k).collect()
-                ]
+                    .distinct().collect()
+                )
                 for cnd in value_conds:
                     assert isinstance(cnd, ast.BinaryExpr)
                     lit = (

@@ -21,6 +21,11 @@ identical to the uncached path.
 The grid phase (``start_ms % step_ms``) is part of the key: extents from
 requests with different phases never mix, so merged rows always sit on
 one consistent grid.
+
+The cache keeps rows in no particular order and returns them in extent
+order: series order is the response shaper's
+(:func:`opengemini_spark.promql.shape.rows_to_prom_matrix`), the same for
+a cached and an uncached request.
 """
 
 from __future__ import annotations
@@ -78,7 +83,10 @@ class ResultsCache:
         eval_fn: EvalFn,
         cache_control: str | None = None,
     ) -> list[Row]:
-        """Serve [start,end] from cached extents + gap evaluations."""
+        """Serve [start,end] from cached extents + gap evaluations.
+
+        Rows come back in extent order, each extent's rows as evaluated
+        or merged; the response shaper orders them."""
         self.stats.requests += 1
         if cache_control == "no-store":
             return self._eval(eval_fn, start_ms, end_ms)
@@ -101,14 +109,12 @@ class ResultsCache:
         merged = self._merge(overlapping + new_extents)
         self._store_back(key, cached, merged)
 
-        out = [
+        return [
             r
             for e in merged
             for r in e.rows
             if start_ms <= r["t"] <= end_ms
         ]
-        out.sort(key=lambda r: (tuple(sorted(r.items())),))
-        return out
 
     # -- internals ---------------------------------------------------------
 

@@ -4,14 +4,18 @@
 ``/api/v1/query_range`` returns a matrix: one entry per label-set with
 ``values: [[unix_seconds, "value-as-string"], …]``; instant queries return
 a vector of single samples.
+
+The shapers take result rows already collected to the driver (the
+response body holds every row, so one ``collect`` is all the Spark work a
+response needs) and order them here, in Python: the series order rule
+(:func:`_series_key`) lives in this module alone, so the results-cache
+path and the uncached path give the same body.
 """
 
 from __future__ import annotations
 
 import decimal
 import math
-
-from pyspark.sql import DataFrame
 
 
 def _fmt_value(v: float) -> str:
@@ -36,109 +40,58 @@ def _fmt_value(v: float) -> str:
     return s
 
 
-def _label_sig(label_cols: list[str]):
-    """Prometheus series order: the rendered ``{name="value", …}``
-    string (absent labels omitted) — `{a="abb"}` sorts before
-    `{aa="bb"}`, and `{job="x", region="y"}` before `{job="x"}`
-    (prom_test.go NameTag/DuplicateLabels order)."""
-    from pyspark.sql import functions as F
+def _series_key(label_cols: list[str]):
+    """Prometheus series order as a sort key over result rows: the
+    rendered ``{name="value", …}`` signature (absent labels omitted, the
+    metric name excluded) — `{a="abb"}` sorts before `{aa="bb"}`, and
+    `{job="x", region="y"}` before `{job="x"}` (prom_test.go
+    NameTag/DuplicateLabels order) — then ``__name__`` nulls first, so
+    same-signature series of different metrics stay contiguous."""
+    sig_cols = [c for c in label_cols if c != "__name__"]
 
-    parts = [
-        F.when(
-            F.col(c).isNotNull(),
-            F.concat(F.lit(f'{c.removeprefix("__lbl_")}="'),
-                     F.col(c).cast("string"), F.lit('"')),
+    def key(r: dict) -> tuple:
+        sig = ", ".join(
+            f'{c.removeprefix("__lbl_")}="{r[c]}"'
+            for c in sig_cols if r[c] is not None
         )
-        for c in label_cols
-        if c != "__name__"   # series order ignores the metric name
-    ]
-    return F.concat(F.lit("{"), F.concat_ws(", ", *parts), F.lit("}"))
+        name = r.get("__name__")
+        return "{" + sig + "}", name is not None, name or ""
+
+    return key
 
 
-def _ordered_rows(
-    df: DataFrame, label_cols: list[str], time_col: str | None
-):
-    """Collect rows ordered (label signature, then time). The response
-    body holds every row, so one ``collect`` is the cheapest way to the
-    driver."""
-    from pyspark.sql import functions as F
-
-    sort = [_label_sig(label_cols).asc()] if label_cols else []
-    if "__name__" in label_cols:
-        # sig excludes the metric name; same-sig series of different
-        # metrics stay CONTIGUOUS (matrix grouping) and name-ordered
-        sort.append(F.col("__name__").asc_nulls_first())
-    if time_col is not None:
-        sort.append(F.col(time_col).asc())
-    return (df.orderBy(*sort) if sort else df).collect()
+def _nulls_first(v) -> tuple:
+    """Sort key of one value in Spark's ascending order: nulls first,
+    NaN after every number."""
+    return v is not None, v != v, v
 
 
-def to_prom_matrix(
-    df: DataFrame,
-    metric_name: str,
-    label_cols: list[str],
-    time_col: str = "t",
-    value_col: str = "value",
-) -> dict:
-    """Shape a (labels…, t µs, value) result into the range-query matrix."""
-    ordered: list[dict] = []
-    key: tuple | None = None
-    for r in _ordered_rows(df, label_cols, time_col):
-        k = tuple(str(r[c]) for c in label_cols)
-        if not ordered or k != key:
-            key = k
-            ordered.append(
-                {
-                    "metric": {
-                        **({"__name__": metric_name} if metric_name else {}),
-                        **{c.removeprefix("__lbl_"): str(r[c])
-                           for c in label_cols if r[c] is not None},
-                    },
-                    "values": [],
-                }
-            )
-        ordered[-1]["values"].append(
-            [r[time_col] / 1_000_000, _fmt_value(r[value_col])]
-        )
+def _metric(r: dict, metric_name: str, label_cols: list[str]) -> dict:
     return {
-        "status": "success",
-        "data": {"resultType": "matrix", "result": ordered},
+        **({"__name__": metric_name} if metric_name else {}),
+        **{c.removeprefix("__lbl_"): str(r[c])
+           for c in label_cols if r[c] is not None},
     }
 
 
 def rows_to_prom_matrix(
-    rows: list[dict],
-    metric_name: str,
-    label_cols: list[str],
-    time_col: str = "t",
-    value_col: str = "value",
+    rows: list[dict], metric_name: str, label_cols: list[str]
 ) -> dict:
-    """Matrix shape from already-materialized rows (the results-cache
-    path — rows were collected when the extents were first evaluated)."""
-    rows = sorted(
-        rows,
-        key=lambda r: (
-            tuple(str(r[c]) for c in label_cols), r[time_col]
-        ),
-    )
+    """Shape (labels…, t µs, value) result rows into the range-query
+    matrix: one entry per series in series order, its samples in time
+    order."""
+    series_key = _series_key(label_cols)
     ordered: list[dict] = []
     key: tuple | None = None
-    for r in rows:
-        k = tuple(str(r[c]) for c in label_cols)
+    for r in sorted(rows, key=lambda r: (series_key(r), r["t"])):
+        k = tuple(r[c] for c in label_cols)
         if not ordered or k != key:
             key = k
             ordered.append(
-                {
-                    "metric": {
-                        **({"__name__": metric_name} if metric_name else {}),
-                        **{c.removeprefix("__lbl_"): str(r[c])
-                           for c in label_cols if r[c] is not None},
-                    },
-                    "values": [],
-                }
+                {"metric": _metric(r, metric_name, label_cols), "values": []}
             )
         ordered[-1]["values"].append(
-            [r[time_col] / 1_000_000, _fmt_value(r[value_col])]
+            [r["t"] / 1_000_000, _fmt_value(r["value"])]
         )
     return {
         "status": "success",
@@ -147,49 +100,43 @@ def rows_to_prom_matrix(
 
 
 def to_prom_vector(
-    df: DataFrame,
+    rows: list[dict],
     metric_name: str,
     label_cols: list[str],
-    time_col: str = "t",
-    value_col: str = "value",
     order: str | None = None,
 ) -> dict:
-    """Instant-query vector: one sample per label-set.
+    """Instant-query vector: one sample per series, in series order.
 
-    ``order`` overrides the default label ordering: "asc"/"desc" sort by
-    value (sort()/sort_desc()), "label:<keys>"/"label_desc:<keys>" by the
-    named labels (sort_by_label[_desc])."""
-    from pyspark.sql import functions as F
-
+    ``order`` overrides it: "asc"/"desc" sort by value (sort()/
+    sort_desc(): nulls, then numbers, then NaN, or the reverse),
+    "label:<keys>"/"label_desc:<keys>" by the named labels
+    (sort_by_label[_desc]; an absent label sorts first, or last). Ties
+    keep series order."""
+    out = sorted(rows, key=_series_key(label_cols))
     if order in ("asc", "desc"):
-        col = F.col(value_col)
-        rows = df.orderBy(
-            col.asc() if order == "asc" else col.desc()
-        ).collect()
+        out.sort(key=lambda r: _nulls_first(r["value"]),
+                 reverse=order == "desc")
     elif order and order.startswith(("label:", "label_desc:")):
-        desc = order.startswith("label_desc:")
-        keys = order.split(":", 1)[1].split(",")
-        cols = [
-            (F.col(k).desc() if desc else F.col(k).asc())
-            for k in keys if k in df.columns
-        ]
-        rows = df.orderBy(*cols).collect() if cols \
-            else _ordered_rows(df, label_cols, None)
-    else:
-        rows = _ordered_rows(df, label_cols, None)
-    out = []
-    for r in rows:
-        out.append(
-            {
-                "metric": {
-                    **({"__name__": metric_name} if metric_name else {}),
-                    **{c.removeprefix("__lbl_"): str(r[c])
-                       for c in label_cols if r[c] is not None},
-                },
-                "value": [r[time_col] / 1_000_000, _fmt_value(r[value_col])],
-            }
-        )
-    return {"status": "success", "data": {"resultType": "vector", "result": out}}
+        kind, names = order.split(":", 1)
+        keys = [k for k in names.split(",") if k in label_cols]
+        if keys:
+            out.sort(
+                key=lambda r: tuple(_nulls_first(r[k]) for k in keys),
+                reverse=kind == "label_desc",
+            )
+    return {
+        "status": "success",
+        "data": {
+            "resultType": "vector",
+            "result": [
+                {
+                    "metric": _metric(r, metric_name, label_cols),
+                    "value": [r["t"] / 1_000_000, _fmt_value(r["value"])],
+                }
+                for r in out
+            ],
+        },
+    }
 
 
 def to_prom_scalar(value: float, time_s: float) -> dict:

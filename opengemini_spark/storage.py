@@ -273,11 +273,16 @@ def compact_partition(spark: SparkSession, root: str, day: str, target_files: in
     analog, immutable/compact.go:418 FullCompact — but per immutable day
     bucket, so memory is bounded by one partition).
 
-    Returns the file count before compaction.
+    The day is read with the table's column schema (the sidecar's, else
+    a ``mergeSchema`` read), so a column that only some of its files hold
+    survives the rewrite. Returns the file count before compaction.
     """
     part_dir = Path(root) / f"{PARTITION_COL}={day}"
     files_before = len(list(part_dir.glob("*.parquet")))
-    df = spark.read.parquet(str(part_dir))
+    df = (
+        _reader(spark, read_schema(root)).option("basePath", root)
+        .parquet(str(part_dir)).drop(PARTITION_COL)
+    )
     tmp = str(part_dir) + ".compact"
     df.coalesce(target_files).write.mode("overwrite").option("compression", "zstd").parquet(tmp)
     shutil.rmtree(part_dir)

@@ -33,15 +33,12 @@ ALLOWLIST = {
     # the plan (iter_influx_blocks)
     ("influxql/shape.py", "iter_influx_blocks"):
         "uncapped InfluxQL result: every row goes into the response body",
-    ("promql/shape.py", "_ordered_rows"):
-        "PromQL matrix/vector: every row goes into the response body",
-    ("promql/shape.py", "to_prom_vector"):
-        "sorted PromQL vector: every row goes into the response body",
     ("api.py", "handle_query"):
         "SHOW TAG KEYS/VALUES, FIELD KEYS: every row goes into the "
         "per-measurement response blocks",
-    ("api.py", "eval_fn"):
-        "PromQL results-cache fill: the extent's rows are the cached value",
+    ("api.py", "_prom_rows"):
+        "PromQL matrix/vector: every row goes into the response body, or "
+        "into the results-cache extent it is served from",
     ("api.py", "handle_prom_read"):
         "remote read: every sample goes into the response timeseries",
 }

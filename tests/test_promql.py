@@ -205,14 +205,18 @@ def test_set_binops(spark, sf_dir, registry):
 
 
 def test_prom_matrix_shape(spark, sf_dir, registry):
-    from opengemini_spark.promql.shape import to_prom_matrix, to_prom_vector
+    from opengemini_spark.promql.shape import (
+        rows_to_prom_matrix,
+        to_prom_vector,
+    )
 
     df = query_range(
         spark, sf_dir, registry,
         'count_over_time(events_value{event_type="error"}[12h])',
         START, START + 2 * 86400, STEP,
     )
-    out = to_prom_matrix(df, "events_value", ["event_type"])
+    rows = [r.asDict() for r in df.collect()]
+    out = rows_to_prom_matrix(rows, "events_value", ["event_type"])
     assert out["status"] == "success"
     assert out["data"]["resultType"] == "matrix"
     blk = out["data"]["result"][0]
@@ -228,9 +232,88 @@ def test_prom_matrix_shape(spark, sf_dir, registry):
         'count_over_time(events_value{event_type="error"}[12h])',
         START + STEP, START + STEP, STEP,
     )
-    vec = to_prom_vector(inst, "events_value", ["event_type"])
+    vec = to_prom_vector([r.asDict() for r in inst.collect()],
+                         "events_value", ["event_type"])
     assert vec["data"]["resultType"] == "vector"
     assert len(vec["data"]["result"]) == 1
+
+
+def test_prom_vector_orders():
+    """``to_prom_vector``'s orders over rows with NaN, ±Inf and a series
+    missing a label: the default series order, sort()/sort_desc() (NaN
+    sorts after every number, so last ascending and first descending) and
+    sort_by_label[_desc] (an absent label sorts first ascending, last
+    descending; a label no series has keeps series order). The expected
+    orders are those the earlier Spark ``orderBy`` shaper gave."""
+    from opengemini_spark.promql.shape import to_prom_vector
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        {"job": j, "zone": z, "t": 5_000_000, "value": v}
+        for j, z, v in [
+            ("b", None, nan), ("a", "x", 3.0), (None, "y", 1.0),
+            ("c", "x", inf), ("a", None, -2.5), ("b", "y", 0.5),
+        ]
+    ]
+
+    def got(order):
+        body = to_prom_vector(rows, "m", ["job", "zone"], order=order)
+        out = []
+        for s in body["data"]["result"]:
+            assert s["metric"].pop("__name__") == "m"
+            assert s["value"][0] == 5
+            out.append((s["metric"].get("job"), s["metric"].get("zone"),
+                        s["value"][1]))
+        return out
+
+    series = [("a", "x", "3"), ("a", None, "-2.5"), ("b", "y", "0.5"),
+              ("b", None, "NaN"), ("c", "x", "+Inf"), (None, "y", "1")]
+    assert got(None) == series
+    assert got("label:nosuch") == series
+    assert got("asc") == [
+        ("a", None, "-2.5"), ("b", "y", "0.5"), (None, "y", "1"),
+        ("a", "x", "3"), ("c", "x", "+Inf"), ("b", None, "NaN"),
+    ]
+    assert got("desc") == [
+        ("b", None, "NaN"), ("c", "x", "+Inf"), ("a", "x", "3"),
+        (None, "y", "1"), ("b", "y", "0.5"), ("a", None, "-2.5"),
+    ]
+    assert got("label:job,zone") == [
+        (None, "y", "1"), ("a", None, "-2.5"), ("a", "x", "3"),
+        ("b", None, "NaN"), ("b", "y", "0.5"), ("c", "x", "+Inf"),
+    ]
+    assert got("label_desc:zone,job") == [
+        ("b", "y", "0.5"), (None, "y", "1"), ("c", "x", "+Inf"),
+        ("a", "x", "3"), ("b", None, "NaN"), ("a", None, "-2.5"),
+    ]
+    # equal sort labels keep series order, in both directions
+    assert got("label:job") == [
+        (None, "y", "1"), ("a", "x", "3"), ("a", None, "-2.5"),
+        ("b", "y", "0.5"), ("b", None, "NaN"), ("c", "x", "+Inf"),
+    ]
+    assert got("label_desc:job") == [
+        ("c", "x", "+Inf"), ("b", "y", "0.5"), ("b", None, "NaN"),
+        ("a", "x", "3"), ("a", None, "-2.5"), (None, "y", "1"),
+    ]
+
+
+def test_prom_query_range_runs_few_jobs(spark, sf_dir, registry, spark_jobs):
+    """``/query_range`` collects its result once and orders it on the
+    driver: no range sort, so no sampling job or range exchange. Counted
+    on the second request, once the first has loaded the table."""
+    from opengemini_spark.api import handle_prom_query_range
+
+    def request():
+        return handle_prom_query_range(
+            spark, sf_dir, registry, "rate(events_value[12h])",
+            START, END, STEP,
+        )
+
+    request()
+    body, jobs = spark_jobs(request)
+    assert body["status"] == "success", body
+    assert body["data"]["result"]
+    assert len(jobs) <= 3, f"/query_range ran {len(jobs)} Spark jobs"
 
 
 def test_histogram_quantile(spark, sf_dir, registry):

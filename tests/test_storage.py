@@ -104,6 +104,32 @@ H_NS = 3_600_000_000_000
 T0 = 1_700_000_000_000_000_000 - 1_700_000_000_000_000_000 % storage.DAY_NS
 
 
+def test_compaction_keeps_columns_of_every_file(spark, tmp_path):
+    """Three batches into one day, each with its own field set, leave
+    files that each hold only some columns; the compacted day keeps
+    every row and every column."""
+    from opengemini_spark.api import handle_write
+
+    root = str(tmp_path / "db")
+    handle_write(spark, [f"m,h=a v=1 {T0}"], root)
+    handle_write(spark, [f"m,h=a w=2 {T0 + 1}"], root)
+    handle_write(spark, [f"m,h=b v=3,x=4 {T0 + 2}"], root)
+    mst = f"{root}/m"
+
+    def rows():
+        df = storage.read_measurement(spark, mst)
+        cols = sorted(c for c in df.columns if c != storage.SEQ_COL)
+        return cols, sorted(map(tuple, df.select(*cols).collect()))
+
+    before = rows()
+    assert {"v", "w", "x"} <= set(before[0])
+    (day_dir,) = Path(mst).glob(f"{storage.PARTITION_COL}=*")
+    day = day_dir.name.split("=", 1)[1]
+    assert storage.compact_partition(spark, mst, day) == 3
+    assert len(list(day_dir.glob("*.parquet"))) == 1
+    assert rows() == before
+
+
 def _batch(n: int = 2000) -> list[str]:
     """``n`` line-protocol points over two measurements, 4 hosts and 3
     hours: the shape of a request-sized write."""
@@ -158,6 +184,23 @@ def test_write_side_requests_run_few_jobs(spark, spark_jobs, tmp_path,
     assert len(jobs) <= 5, f"INTO rollup ran {len(jobs)} Spark jobs"
     plan = written[0]._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan.lower(), plan
+
+
+def test_show_tag_values_runs_few_jobs(spark, spark_jobs, tmp_path):
+    """SHOW TAG VALUES over a ``handle_write`` measurement sorts its
+    collected values on the driver: the planner's distinct and the API's
+    per-measurement blocks run no range sort."""
+    from opengemini_spark.api import handle_query, handle_write
+
+    root = str(tmp_path / "db")
+    handle_write(spark, _batch(), root)
+    q = "SHOW TAG VALUES FROM cpu WITH KEY = host"
+    got, jobs = spark_jobs(lambda: handle_query(spark, root, q, data_root=root))
+    assert got["results"][0]["series"] == [{
+        "name": "cpu", "columns": ["key", "value"],
+        "values": [["host", f"h{i}"] for i in range(4)],
+    }]
+    assert len(jobs) <= 4, f"SHOW TAG VALUES ran {len(jobs)} Spark jobs"
 
 
 def test_read_schema_matches_a_merge_schema_read(spark, tmp_path):
